@@ -94,34 +94,40 @@ def main() -> None:
     total = round(sum(queries.values()) + wall, 3)
     queries["extraction_throughput"] = round(wall, 3)
 
-    # self-flag >2x movers against the last committed full-battery
-    # record (BENCH_FULL_R*.json) so a regression is visible in the
-    # output line itself, not only to a human diffing rounds. A/B
-    # rules from BASELINE.md still apply before believing a flag —
-    # this box has minute-scale contention windows.
+    # self-flag >2x movers against the newest committed full-battery
+    # record (BENCH_FULL_R*.json) at the same sf and cores, so a
+    # regression is visible in the output line itself, not only to a
+    # human diffing rounds. A/B rules from BASELINE.md still apply
+    # before believing a flag — this box has minute-scale contention
+    # windows.
     flagged: dict[str, list[float]] = {}
     ref_path = os.environ.get("SPARK_GRAFT_BENCH_REF")
+    # newest round first, by the round number in the name (a plain
+    # sort puts R10 before R5)
     candidates = (
         [pathlib.Path(ref_path)] if ref_path
         else sorted(
             pathlib.Path(__file__).resolve().parent.glob(
                 "BENCH_FULL_R*.json"
-            )
-        )[-1:]
+            ),
+            key=lambda p: int(p.stem.rsplit("R", 1)[1]),
+            reverse=True,
+        )
     )
     for ref_file in candidates:
         try:
             rec = json.loads(ref_file.read_text())
         except (OSError, ValueError):
             continue
-        if rec.get("sf") != sf:
-            continue  # cross-SF wall times are not comparable
+        if rec.get("sf") != sf or rec.get("cores") != cores:
+            continue  # cross-SF or cross-core wall times are not comparable
         ref = rec.get("queries", {})
         for k, v in queries.items():
             old = ref.get(k)
             if isinstance(old, (int, float)) and old > 0.05 \
                     and v > 2 * old:
                 flagged[k] = [old, v]
+        break
 
     print(
         json.dumps(

@@ -184,22 +184,6 @@ def wrap_pdf_layout(text: str, doc_id: int) -> bytes:
                      ocg_layers=ocg_layers, encrypt=encrypt)
 
 
-def _roundtrip_iter(wrapper):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [wrapper(t) for t in pdf["text"]]
-            texts = [
-                extract_document(p, DEFAULT_CONFIG)["extracted_text"]
-                for p in payloads
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(),
-                 "extracted_text": texts}
-            )
-
-    return fn
-
-
 def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
     """Hash-repartition by doc id before the Arrow stage — a small
     parquet table arrives as ONE input split, which would serialize the

@@ -1,6 +1,7 @@
 """A from-scratch snapshot/manifest table format in the Iceberg
 mold — the missing piece between "a directory of parquet" and the
-north rule's "Iceberg table of pages".
+north rule's "Iceberg table of pages". It is also the one sink of the
+production extraction job (``sources.pages.run_extraction_job``).
 
 Public concepts only (the architecture every modern table format —
 Iceberg, Delta, Hudi — shares, reimplemented over plain files):
@@ -17,7 +18,9 @@ Iceberg, Delta, Hudi — shares, reimplemented over plain files):
 - **Commit is one atomic pointer flip**: the snapshot JSON is
   written first, then ``VERSION`` is replaced atomically
   (``os.replace``). A crash between the two leaves the table on the
-  previous snapshot — half-written commits are invisible.
+  previous snapshot — half-written commits are invisible. A commit
+  names the snapshot its plan read (``parent``) and fails with
+  :class:`CommitConflict` if another writer committed since.
 - **Scan planning prunes by stats**: a predicate ``col op value``
   eliminates every file whose [min, max] range cannot satisfy it
   before Spark reads a byte — the file-level analogue of row-group
@@ -29,17 +32,24 @@ Iceberg, Delta, Hudi — shares, reimplemented over plain files):
   write side); untouched files carry over into the new snapshot by
   reference.
 
+Layout: ``data/*.parquet``, ``_log/VERSION`` + ``_log/snap-<id>.json``
+and in-flight ``_staging-*/`` write dirs. Manifest paths are relative
+to the table root, so a copied table reads its own files. The ``_``
+prefix hides the log from pyarrow's dataset discovery, so
+``pq.read_table(path)`` of an append-only table returns its rows
+(``_metadata`` would not: Spark's file index keeps that name).
+
 Deliberately minimal: single table version lineage (optimistic
-last-writer-wins with a staleness check), no partition spec (the
-Z-order key makes sort-clustering the layout tool), no schema
-evolution. Each omission is a documented scope cut, not an
-oversight.
+concurrency with a staleness check), no partition spec (the Z-order
+key makes sort-clustering the layout tool), no schema evolution. Each
+omission is a documented scope cut, not an oversight.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -52,8 +62,8 @@ class CommitConflict(RuntimeError):
     """The table advanced underneath an in-flight commit."""
 
 
-def _meta_dir(path: str) -> str:
-    return os.path.join(path, "metadata")
+def _log_dir(path: str) -> str:
+    return os.path.join(path, "_log")
 
 
 def _data_dir(path: str) -> str:
@@ -61,29 +71,55 @@ def _data_dir(path: str) -> str:
 
 
 def _version_file(path: str) -> str:
-    return os.path.join(_meta_dir(path), "VERSION")
+    return os.path.join(_log_dir(path), "VERSION")
 
 
-def current_snapshot_id(path: str) -> int:
-    with open(_version_file(path)) as fh:
-        return int(fh.read().strip())
+def current_snapshot_id(path: str) -> int | None:
+    """The committed snapshot id, or None when ``path`` holds no table."""
+    try:
+        with open(_version_file(path)) as fh:
+            return int(fh.read().strip())
+    except FileNotFoundError:
+        return None
 
 
 def _snap_path(path: str, snap_id: int) -> str:
-    return os.path.join(_meta_dir(path), f"snap-{snap_id}.json")
+    return os.path.join(_log_dir(path), f"snap-{snap_id}.json")
 
 
 def read_snapshot(path: str, snap_id: int | None = None) -> dict:
+    """Snapshot ``snap_id`` (default: current), manifest paths
+    resolved against ``path``."""
     if snap_id is None:
         snap_id = current_snapshot_id(path)
     with open(_snap_path(path, snap_id)) as fh:
-        return json.load(fh)
+        snap = json.load(fh)
+    for e in snap["manifest"]:
+        e["path"] = os.path.join(path, e["path"])
+    return snap
 
 
-def _file_stats(fpath: str, stat_cols: list[str]) -> dict:
+def _chain(path: str):
+    """Snapshots from the current one back along the parent links."""
+    sid = current_snapshot_id(path)
+    while sid is not None:
+        snap = read_snapshot(path, sid)
+        yield snap
+        sid = snap["parent"]
+
+
+def _write_snapshot(path: str, snap: dict) -> None:
+    manifest = [
+        {**e, "path": os.path.relpath(e["path"], path)}
+        for e in snap["manifest"]
+    ]
+    with open(_snap_path(path, snap["snapshot_id"]), "w") as fh:
+        json.dump({**snap, "manifest": manifest}, fh)
+
+
+def _file_stats(meta, stat_cols: list[str]) -> dict:
     """Footer-only stats harvest: min/max/nulls per stat column,
     merged across row groups. No data pages are read."""
-    meta = pq.ParquetFile(fpath).metadata
     names = {
         meta.schema.column(i).name: i
         for i in range(meta.num_columns)
@@ -113,11 +149,12 @@ def _file_stats(fpath: str, stat_cols: list[str]) -> dict:
     return out
 
 
-def _write_data_files(
+def write_data_files(
     df: DataFrame, path: str, stat_cols: list[str]
 ) -> list[dict]:
-    """Materialize ``df`` as immutable parquet under data/ and return
-    manifest entries."""
+    """Run ``df`` once into a staging dir, move its parquet files
+    under data/ and return their manifest entries, not yet committed.
+    Row counts and stats come from the footers."""
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(staging)
     os.makedirs(_data_dir(path), exist_ok=True)
@@ -134,13 +171,25 @@ def _write_data_files(
             {
                 "path": final,
                 "n_rows": meta.num_rows,
-                "stats": _file_stats(final, stat_cols),
+                "stats": _file_stats(meta, stat_cols),
             }
         )
-    for leftover in os.listdir(staging):
-        os.remove(os.path.join(staging, leftover))
-    os.rmdir(staging)
+    shutil.rmtree(staging)
     return entries
+
+
+def delete_files(entries: list[dict]) -> None:
+    """Remove uncommitted data files (entries no snapshot lists)."""
+    for e in entries:
+        os.remove(e["path"])
+
+
+def _staged(
+    df: DataFrame | list[dict], path: str, stat_cols: list[str]
+) -> list[dict]:
+    if isinstance(df, list):
+        return df  # already written by write_data_files
+    return write_data_files(df, path, stat_cols)
 
 
 def _commit(
@@ -148,24 +197,19 @@ def _commit(
     operation: str,
 ) -> int:
     """Write the snapshot, then flip VERSION atomically. Raises
-    :class:`CommitConflict` if the table advanced past ``parent``."""
+    :class:`CommitConflict` if the table is no longer at ``parent``
+    (None: no table yet)."""
+    live = current_snapshot_id(path)
+    if live != parent:
+        raise CommitConflict(
+            f"table at snapshot {live}, expected {parent}"
+        )
     snap_id = (parent or 0) + 1
-    if parent is not None:
-        live = current_snapshot_id(path)
-        if live != parent:
-            raise CommitConflict(
-                f"table at snapshot {live}, expected {parent}"
-            )
-    snap = {
-        "snapshot_id": snap_id,
-        "parent": parent,
-        "operation": operation,
-        "committed_at": int(time.time()),
-        "manifest": manifest,
-    }
-    os.makedirs(_meta_dir(path), exist_ok=True)
-    with open(_snap_path(path, snap_id), "w") as fh:
-        json.dump(snap, fh)
+    os.makedirs(_log_dir(path), exist_ok=True)
+    _write_snapshot(path, {
+        "snapshot_id": snap_id, "parent": parent, "operation": operation,
+        "committed_at": int(time.time()), "manifest": manifest,
+    })
     tmp = _version_file(path) + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         fh.write(str(snap_id))
@@ -173,20 +217,43 @@ def _commit(
     return snap_id
 
 
-def create_table(
-    df: DataFrame, path: str, stat_cols: list[str]
+def _commit_new(
+    path: str, kept: list[dict], new: list[dict], parent: int | None,
+    operation: str,
 ) -> int:
+    """Commit ``kept + new``; a commit that loses the race deletes the
+    ``new`` files it wrote, since no snapshot will ever list them."""
+    try:
+        return _commit(path, kept + new, parent, operation)
+    except CommitConflict:
+        delete_files(new)
+        raise
+
+
+def create_table(
+    df: DataFrame | list[dict], path: str, stat_cols: list[str]
+) -> int:
+    """Commit snapshot 1 from ``df`` (or files it staged with
+    :func:`write_data_files`)."""
     os.makedirs(path, exist_ok=True)
-    entries = _write_data_files(df, path, stat_cols)
-    return _commit(path, entries, None, "create")
-
-
-def append(df: DataFrame, path: str, stat_cols: list[str]) -> int:
-    parent = current_snapshot_id(path)
-    manifest = read_snapshot(path)["manifest"] + _write_data_files(
-        df, path, stat_cols
+    return _commit_new(
+        path, [], _staged(df, path, stat_cols), None, "create"
     )
-    return _commit(path, manifest, parent, "append")
+
+
+def append(
+    df: DataFrame | list[dict],
+    path: str,
+    stat_cols: list[str],
+    parent: int | None = None,
+) -> int:
+    """Commit ``df``'s rows on top of snapshot ``parent`` (default:
+    the current one)."""
+    if parent is None:
+        parent = current_snapshot_id(path)
+    manifest = read_snapshot(path, parent)["manifest"]
+    new = _staged(df, path, stat_cols)
+    return _commit_new(path, manifest, new, parent, "append")
 
 
 def _overlaps(stats: dict | None, lo, hi) -> bool:
@@ -254,62 +321,56 @@ def read_table(
 
 def merge_upsert(
     spark: SparkSession,
-    df: DataFrame,
+    df: DataFrame | list[dict],
     path: str,
     key: str,
     stat_cols: list[str],
+    parent: int | None = None,
 ) -> int:
-    """Copy-on-write MERGE on ``key``: files whose [min, max] key
-    range overlaps the incoming keys are rewritten without their
+    """Copy-on-write MERGE on ``key`` on top of snapshot ``parent``
+    (default: the current one): files whose [min, max] key range
+    overlaps a staged incoming file's are rewritten without their
     matched rows; all other files carry over BY REFERENCE. Incoming
-    rows are appended as new files. One atomic snapshot flip."""
-    parent = current_snapshot_id(path)
-    manifest = read_snapshot(path)["manifest"]
-    lo, hi = df.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).collect()[0]
-    touched = [
-        e for e in manifest if _overlaps(e["stats"].get(key), lo, hi)
-    ]
-    # set-difference on file paths: a list-membership scan is O(n^2)
-    # dict compares, quadratic at production manifest sizes
-    touched_paths = {e["path"] for e in touched}
-    untouched = [
-        e for e in manifest if e["path"] not in touched_paths
-    ]
-    new_entries = []
+    rows are staged once (or arrive staged by
+    :func:`write_data_files`); key ranges come from the staged
+    footers and keys from the staged files, so ``df``'s plan runs
+    exactly once. One atomic snapshot flip."""
+    if parent is None:
+        parent = current_snapshot_id(path)
+    manifest = read_snapshot(path, parent)["manifest"]
+    new = _staged(df, path, stat_cols)
+    ranges = [e["stats"].get(key) for e in new if e["n_rows"]]
+
+    def hit(e: dict) -> bool:
+        st = e["stats"].get(key)
+        return any(r is None or _overlaps(st, r["min"], r["max"])
+                   for r in ranges)
+
+    touched = [e for e in manifest if hit(e)]
+    untouched = [e for e in manifest if not hit(e)]
     if touched:
         old = spark.read.parquet(*[e["path"] for e in touched])
-        keys = df.select(key).distinct()
-        survivors = old.join(keys, key, "left_anti")
-        if survivors.limit(1).count() > 0:
-            new_entries += _write_data_files(
-                survivors, path, stat_cols
-            )
-    new_entries += _write_data_files(df, path, stat_cols)
-    return _commit(
-        path, untouched + new_entries, parent, "merge"
-    )
+        keys = spark.read.parquet(*[e["path"] for e in new]).select(key)
+        survivors = write_data_files(
+            old.join(keys, key, "left_anti"), path, stat_cols
+        )
+        delete_files([e for e in survivors if not e["n_rows"]])
+        new = [e for e in survivors if e["n_rows"]] + new
+    return _commit_new(path, untouched, new, parent, "merge")
 
 
 def snapshot_log(path: str) -> list[dict]:
     """History, oldest first: (snapshot_id, operation, n_files,
     n_rows) per snapshot."""
-    out = []
-    sid: int | None = current_snapshot_id(path)
-    while sid is not None:
-        snap = read_snapshot(path, sid)
-        out.append(
-            {
-                "snapshot_id": snap["snapshot_id"],
-                "operation": snap["operation"],
-                "n_files": len(snap["manifest"]),
-                "n_rows": sum(
-                    e["n_rows"] for e in snap["manifest"]
-                ),
-            }
-        )
-        sid = snap["parent"]
+    out = [
+        {
+            "snapshot_id": snap["snapshot_id"],
+            "operation": snap["operation"],
+            "n_files": len(snap["manifest"]),
+            "n_rows": sum(e["n_rows"] for e in snap["manifest"]),
+        }
+        for snap in _chain(path)
+    ]
     return list(reversed(out))
 
 
@@ -329,10 +390,7 @@ N_CHUNKS = 5
 
 
 def table_pruning_catalog(spark, sf_dir: str):
-    import shutil
     import tempfile
-
-    from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "source"
@@ -401,47 +459,6 @@ FROM params
 """
 
 
-# ------------------------------------- extraction job on the table
-#
-# The north rule's resume loop on the REAL table format: extraction
-# output lives in a snapshot table, a re-run anti-joins against the
-# CURRENT snapshot's urls (never a directory listing), recrawls
-# upsert by url through the copy-on-write MERGE, and every batch is
-# one atomic commit — a job killed mid-write leaves the table on the
-# previous snapshot with no half-batch visible, which is the
-# property "append parquet + hope" cannot give.
-
-TABLE_STAT_COLS = ["url", "warc_ts"]
-
-
-def extract_to_table(
-    spark: SparkSession,
-    pages: DataFrame,
-    table_path: str,
-    num_partitions: int = 8,
-    upsert: bool = False,
-) -> int | None:
-    """Resume-aware extraction into a snapshot table. Returns the new
-    snapshot id, or None when nothing new needed extracting."""
-    from ..plans.pipeline import extract_pages
-
-    exists = os.path.exists(_version_file(table_path))
-    todo = pages
-    if exists and not upsert:
-        done = read_table(spark, table_path).select("url")
-        todo = pages.join(done, "url", "left_anti")
-    if todo.limit(1).count() == 0:
-        return None
-    extracted = extract_pages(todo, num_partitions=num_partitions)
-    if not exists:
-        return create_table(extracted, table_path, TABLE_STAT_COLS)
-    if upsert:
-        return merge_upsert(
-            spark, extracted, table_path, "url", TABLE_STAT_COLS
-        )
-    return append(extracted, table_path, TABLE_STAT_COLS)
-
-
 # ---------------------------------------- maintenance: compact + vacuum
 #
 # The two background jobs every snapshot table needs at scale:
@@ -481,7 +498,7 @@ def compact(
     merged = spark.read.parquet(
         *[e["path"] for e in small]
     ).coalesce(target_partitions)
-    entries = _write_data_files(merged, path, stat_cols)
+    entries = write_data_files(merged, path, stat_cols)
     return _commit(path, big + entries, parent, "compact")
 
 
@@ -489,13 +506,7 @@ def expire_snapshots(path: str, keep_last: int = 2) -> dict:
     """Drop all but the newest ``keep_last`` snapshots and delete
     data files unreachable from the kept set. Returns counts:
     {snapshots_removed, files_removed}."""
-    current = current_snapshot_id(path)
-    chain = []
-    sid: int | None = current
-    while sid is not None:
-        snap = read_snapshot(path, sid)
-        chain.append(snap)
-        sid = snap["parent"]
+    chain = list(_chain(path))
     kept, dropped = chain[:keep_last], chain[keep_last:]
     live = {
         e["path"] for snap in kept for e in snap["manifest"]
@@ -514,12 +525,7 @@ def expire_snapshots(path: str, keep_last: int = 2) -> dict:
     # sever the parent pointer at the new horizon so the log walk
     # terminates instead of chasing a deleted snapshot
     if dropped and kept:
-        oldest = kept[-1]
-        oldest["parent"] = None
-        with open(
-            _snap_path(path, oldest["snapshot_id"]), "w"
-        ) as fh:
-            json.dump(oldest, fh)
+        _write_snapshot(path, {**kept[-1], "parent": None})
     return {
         "snapshots_removed": len(dropped),
         "files_removed": len(dead_files),
@@ -547,14 +553,9 @@ def remove_orphan_files(
         except OSError:
             return False  # vanished concurrently: not ours to count
 
-    chain_ids: set[int] = set()
-    live: set[str] = set()
-    sid: int | None = current_snapshot_id(path)
-    while sid is not None:
-        snap = read_snapshot(path, sid)
-        chain_ids.add(snap["snapshot_id"])
-        live |= {e["path"] for e in snap["manifest"]}
-        sid = snap["parent"]
+    chain = list(_chain(path))
+    chain_ids = {snap["snapshot_id"] for snap in chain}
+    live = {e["path"] for snap in chain for e in snap["manifest"]}
     counts = {"data_files_removed": 0, "snapshots_removed": 0,
               "tmp_removed": 0, "staging_removed": 0}
     ddir = _data_dir(path)
@@ -564,7 +565,7 @@ def remove_orphan_files(
             if f not in live and _old(f):
                 os.remove(f)
                 counts["data_files_removed"] += 1
-    mdir = _meta_dir(path)
+    mdir = _log_dir(path)
     if os.path.isdir(mdir):
         for name in os.listdir(mdir):
             if not name.startswith("snap-"):
@@ -588,9 +589,7 @@ def remove_orphan_files(
         f = os.path.join(path, name)
         if name.startswith("_staging-") and os.path.isdir(f) \
                 and _old(f):
-            for leftover in os.listdir(f):
-                os.remove(os.path.join(f, leftover))
-            os.rmdir(f)
+            shutil.rmtree(f)  # a killed Spark write nests _temporary/
             counts["staging_removed"] += 1
     return counts
 

@@ -1,25 +1,29 @@
-"""Pages-table sources + checkpoint-resume sink (SURVEY.md §2.1).
+"""Pages-table sources + the checkpoint-resume extraction job
+(SURVEY.md §2.1).
 
 The production design targets an Iceberg table (``MERGE INTO ... WHEN
-NOT MATCHED THEN INSERT`` keyed on url — S5); this sandbox has no
-Iceberg runtime jars, so the sink is a parquet directory with the SAME
-merge semantics realized as **anti-join before compute + append after**
-(documented fallback, SURVEY.md §7.2 stage 5). The resume contract is
-identical: a re-run processes only urls absent from the output, so
-re-runs are idempotent — no duplicates, no loss.
+NOT MATCHED THEN INSERT`` keyed on url — S5); the sink here is the
+snapshot table of ``sources/icetable.py``, with the SAME merge
+semantics: anti-join against the current snapshot's urls before
+compute, one atomic commit after. A re-run processes only urls absent
+from the table, so re-runs are idempotent — no duplicates, no loss.
 """
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from . import icetable
 
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+# footer stats the sink's manifest keeps: url prunes the MERGE, warc_ts
+# serves time-scoped scans
+TABLE_STAT_COLS = ["url", "warc_ts"]
 
 
 def pages_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
@@ -37,26 +41,47 @@ def write_pages(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
-def _output_exists(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        name.endswith(".parquet") for name in os.listdir(path)
-    )
-
-
 def resume_filter(
-    pages: DataFrame, spark: SparkSession, out_path: str
+    pages: DataFrame,
+    spark: SparkSession,
+    out_path: str,
+    snap_id: int | None = None,
+    upsert: bool = False,
 ) -> DataFrame:
-    """S5/S6 checkpoint resume: anti-join the work list against already-
-    extracted urls. Equivalent to Iceberg MERGE's NOT MATCHED branch.
+    """S5/S6 checkpoint resume against snapshot ``snap_id`` (default:
+    the current one) of the sink table at ``out_path``.
 
-    The completed-url side projects a single string column before the
+    Insert mode drops every url the snapshot holds (Iceberg MERGE's
+    NOT MATCHED branch). Upsert mode (re-crawls, the WHEN MATCHED
+    branch) keeps the newest crawl of each url in ``pages`` and drops
+    it if the snapshot's row for that url has the same or a newer
+    ``warc_ts``, so only strictly newer crawls reach extraction.
+
+    The completed-url side projects only the key columns before the
     join; at 10^12 rows this is a shuffled left-anti hash join on the
     url key — never a broadcast of the big side.
     """
-    if not _output_exists(out_path):
+    if upsert:
+        newest = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+        pages = (
+            pages.withColumn("_rn", F.row_number().over(newest))
+            .where("_rn = 1")
+            .drop("_rn")
+        )
+    if snap_id is None and icetable.current_snapshot_id(out_path) is None:
         return pages
-    done = spark.read.parquet(out_path).select("url")
-    return pages.join(done, "url", "left_anti")
+    done = icetable.read_table(spark, out_path, snap_id=snap_id)
+    if not upsert:
+        return pages.join(done.select("url"), "url", "left_anti")
+    seen = done.select(
+        F.col("url").alias("_seen_url"), F.col("warc_ts").alias("_seen_ts")
+    )
+    return pages.join(
+        seen,
+        (F.col("url") == F.col("_seen_url"))
+        & (F.col("_seen_ts") >= F.col("warc_ts")),
+        "left_anti",
+    )
 
 
 def read_pages_binary(
@@ -84,62 +109,6 @@ def read_pages_binary(
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
-
-
-def append_extracted(extracted: DataFrame, out_path: str) -> None:
-    """Append new results (the INSERT branch of the MERGE)."""
-    extracted.write.mode("append").parquet(out_path)
-
-
-def upsert_extracted(
-    spark: SparkSession, batch: DataFrame, out_path: str
-) -> None:
-    """The MERGE ``WHEN MATCHED`` branch for RE-CRAWLED pages: a new
-    extraction of an existing url replaces the stored row iff its
-    ``warc_ts`` is strictly newer; otherwise the stored row wins.
-    (``run_extraction_job``'s anti-join covers only the NOT MATCHED
-    insert path — first-crawl semantics.)
-
-    Iceberg would express this as ``MERGE INTO extracted USING batch
-    ON url WHEN MATCHED AND batch.warc_ts > extracted.warc_ts THEN
-    UPDATE WHEN NOT MATCHED THEN INSERT``; the parquet stand-in
-    resolves per-url winners with one window over the union (over the
-    batch alone on first write — a batch carrying several crawls of
-    one url still keeps exactly the newest) and swaps directories via
-    two renames, so the merged data always exists on disk: a crash
-    between the renames leaves it in ``<out>.__merge_old__`` /
-    ``.__merge_tmp__`` rather than lost. Deterministic tie-break:
-    newer warc_ts wins, then the incoming row."""
-    import shutil
-
-    from pyspark.sql.window import Window
-
-    incoming = batch.withColumn("_src", F.lit(1))
-    if _output_exists(out_path):
-        existing = spark.read.parquet(out_path).withColumn(
-            "_src", F.lit(0)
-        )
-        union = existing.unionByName(incoming)
-    else:
-        union = incoming
-    w = Window.partitionBy("url").orderBy(
-        F.desc("warc_ts"), F.desc("_src")
-    )
-    merged = (
-        union.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .drop("_rn", "_src")
-    )
-    tmp = out_path.rstrip("/") + ".__merge_tmp__"
-    old = out_path.rstrip("/") + ".__merge_old__"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(out_path):
-        os.rename(out_path, old)
-    os.rename(tmp, out_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
 
 
 def write_report_csv(extracted: DataFrame, path: str) -> None:
@@ -226,17 +195,39 @@ def run_extraction_job(
     out_path: str,
     metrics_path: str | None = None,
     num_partitions: int = 32,
-) -> None:
-    """End-to-end job: resume-filter → extract → append + metrics.
+    upsert: bool = False,
+) -> int | None:
+    """End-to-end job: resume filter → extract → one commit to the
+    snapshot table at ``out_path`` (an append, or with ``upsert`` a
+    copy-on-write MERGE on url) → metrics of the rows it added.
+    Returns the snapshot id, or None when nothing needed extracting:
+    then nothing is committed and ``metrics_path`` is left alone.
 
-    This is the body that ``spark-submit --py-files`` runs on a cluster
-    (``scripts/submit_job.py``).
+    The commit names the snapshot the resume filter read, so a writer
+    that committed in between raises :class:`icetable.CommitConflict`
+    instead of duplicating urls. This is the body that
+    ``scripts/submit_job.py`` and both streaming jobs run.
     """
-    from ..plans.pipeline import extract_pages, metrics_from_extracted
+    from ..plans import pipeline
 
-    todo = resume_filter(pages, spark, out_path)
-    extracted = extract_pages(todo, num_partitions=num_partitions)
-    append_extracted(extracted, out_path)
+    parent = icetable.current_snapshot_id(out_path)
+    todo = resume_filter(pages, spark, out_path, parent, upsert)
+    extracted = pipeline.extract_pages(todo, num_partitions=num_partitions)
+    new = icetable.write_data_files(extracted, out_path, TABLE_STAT_COLS)
+    if not any(e["n_rows"] for e in new):
+        icetable.delete_files(new)
+        return None
+    if parent is None:
+        snap_id = icetable.create_table(new, out_path, TABLE_STAT_COLS)
+    elif upsert:
+        snap_id = icetable.merge_upsert(
+            spark, new, out_path, "url", TABLE_STAT_COLS, parent
+        )
+    else:
+        snap_id = icetable.append(new, out_path, TABLE_STAT_COLS, parent)
     if metrics_path:
-        metrics = metrics_from_extracted(spark.read.parquet(out_path))
-        metrics.write.mode("overwrite").parquet(metrics_path)
+        added = spark.read.parquet(*[e["path"] for e in new])
+        pipeline.metrics_from_extracted(added).write.mode(
+            "overwrite"
+        ).parquet(metrics_path)
+    return snap_id

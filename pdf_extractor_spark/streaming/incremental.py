@@ -8,12 +8,13 @@ skip-existing, ``large_doc_extractor.py:147-199``,
    ``checkpointLocation`` — Spark's streaming checkpoint records which
    input files each micro-batch consumed, so a restarted query never
    re-reads completed batches (exactly-once source tracking).
-2. **Sink idempotence**: inside ``foreachBatch``, the batch is
-   anti-joined against the already-extracted urls before compute and
-   appended after (the Iceberg ``MERGE INTO ... WHEN NOT MATCHED``
-   semantics, same as the batch pipeline's resume — S5/S6). Even if a
-   batch is replayed after a crash mid-write, re-extraction is skipped
-   for urls that landed, and duplicates cannot enter the output.
+2. **Sink idempotence**: inside ``foreachBatch``, each micro-batch runs
+   the batch job, ``sources.pages.run_extraction_job``: anti-joined
+   against the snapshot table's urls before compute and committed as
+   one snapshot after (the Iceberg ``MERGE INTO ... WHEN NOT MATCHED``
+   semantics — S5/S6). Even if a batch is replayed after a crash
+   mid-write, re-extraction is skipped for urls that landed, and
+   duplicates cannot enter the output.
 
 ``trigger(availableNow=True)`` drains everything currently available
 then stops — the batch-job-with-streaming-bookkeeping mode, which is
@@ -40,14 +41,27 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..plans.pipeline import extract_pages
-from ..sources.pages import (
-    PAGES_SCHEMA_DDL,
-    _output_exists,
-    append_extracted,
-    resume_filter,
-    upsert_extracted,
-)
+from ..sources.pages import PAGES_SCHEMA_DDL, run_extraction_job
+
+
+def _extract_stream(
+    stream: DataFrame, out_path: str, checkpoint_path: str,
+    num_partitions: int, upsert: bool,
+) -> StreamingQuery:
+    """Run ``run_extraction_job`` on each availableNow micro-batch."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        run_extraction_job(
+            batch_df.sparkSession, batch_df, out_path,
+            num_partitions=num_partitions, upsert=upsert,
+        )
+
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_extract(
@@ -68,19 +82,8 @@ def stream_extract(
     reader = spark.readStream.schema(PAGES_SCHEMA_DDL)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pages_path)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        todo = resume_filter(batch_df, batch_df.sparkSession, out_path)
-        extracted = extract_pages(todo, num_partitions=num_partitions)
-        append_extracted(extracted, out_path)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _extract_stream(reader.parquet(pages_path), out_path,
+                           checkpoint_path, num_partitions, False)
 
 
 def stream_extract_upsert(
@@ -92,50 +95,22 @@ def stream_extract_upsert(
 ) -> StreamingQuery:
     """Re-crawl-aware incremental extraction: the MERGE ``WHEN
     MATCHED`` counterpart of :func:`stream_extract` (which covers only
-    first-crawl inserts). Each micro-batch:
+    first-crawl inserts). Each micro-batch runs the batch job with
+    ``upsert=True``:
 
-    1. skips rows whose url already exists with a same-or-newer
-       ``warc_ts`` (no wasted extraction on stale replays — the skip
-       is a shuffled equi-join on url, never a broadcast of the big
-       side);
+    1. keeps the newest crawl of each url in the batch and skips it if
+       the table holds that url with a same-or-newer ``warc_ts`` (no
+       wasted extraction on stale replays — the skip is a shuffled
+       join on url, never a broadcast of the big side);
     2. extracts the remaining rows;
-    3. merges with newest-wins semantics (``upsert_extracted`` — one
-       window over the union, atomic directory swap).
+    3. commits a copy-on-write MERGE on url, which therefore only ever
+       sees newer rows.
 
-    A batch carrying several crawls of the same url extracts them all;
-    the merge window keeps the newest. Idempotent under batch replay:
-    re-running a landed batch finds every url up to date and skips."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        todo = batch_df
-        if _output_exists(out_path):
-            existing = s.read.parquet(out_path).select(
-                "url", F.col("warc_ts").alias("_seen_ts")
-            )
-            todo = (
-                batch_df.join(existing, "url", "left")
-                .where(
-                    F.col("_seen_ts").isNull()
-                    | (F.col("warc_ts") > F.col("_seen_ts"))
-                )
-                .drop("_seen_ts")
-            )
-        # replayed / all-stale batches: nothing survived the skip-join,
-        # so do NOT pay a full read+rewrite of the store for a no-op
-        if todo.isEmpty():
-            return
-        extracted = extract_pages(todo, num_partitions=num_partitions)
-        upsert_extracted(s, extracted, out_path)
-
-    return (
-        spark.readStream.schema(PAGES_SCHEMA_DDL)
-        .parquet(pages_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    Idempotent under batch replay: re-running a landed batch finds
+    every url up to date, extracts nothing and commits nothing."""
+    stream = spark.readStream.schema(PAGES_SCHEMA_DDL).parquet(pages_path)
+    return _extract_stream(stream, out_path, checkpoint_path,
+                           num_partitions, True)
 
 
 def stream_windowed_ingest_stats(

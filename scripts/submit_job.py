@@ -17,9 +17,13 @@ multi-executor cluster):
 
 On a cluster the session comes from ``spark-submit``'s master/conf (we
 call ``getOrCreate`` without forcing ``local[...]``); locally the same
-script runs standalone through the tuned builder. Re-running with the
-same ``--out`` resumes: completed urls are anti-joined away before any
-compute (MERGE semantics, ``sources/pages.py``).
+script runs standalone through the tuned builder.
+
+``--out`` is a snapshot table (read it with ``icetable.read_table``).
+Re-running with the same ``--out`` resumes: completed urls are
+anti-joined away before any compute (MERGE semantics,
+``sources/pages.py``); ``--metrics`` covers the rows a run added, and
+a run with nothing new commits nothing and leaves it alone.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pages", required=True, help="pages table path")
-    ap.add_argument("--out", required=True, help="extracted output path")
+    ap.add_argument("--out", required=True, help="extracted table path")
     ap.add_argument("--metrics", default=None, help="metrics output path")
     ap.add_argument("--partitions", type=int, default=32)
     args = ap.parse_args()

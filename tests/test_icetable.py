@@ -142,50 +142,54 @@ class TestIceTable:
         assert it.read_table(spark, path).count() == 10
 
 
-class TestExtractToTable:
+class TestExtractionJobOnTable:
     def test_resume_and_upsert_on_the_table(self, spark, tmp_path):
+        import datetime as dt
+
+        import pandas as pd
+
         from pdf_extractor_spark.fixtures.corpus import (
             build_pages_frame,
         )
-        from pdf_extractor_spark.sources.icetable import (
-            extract_to_table,
-        )
         from pdf_extractor_spark.sources.pages import (
             pages_from_pandas,
+            run_extraction_job,
         )
 
         path = str(tmp_path / "extracted")
         frame = build_pages_frame()
         w1, w2 = frame.iloc[:10], frame.iloc[10:20]
 
-        s1 = extract_to_table(
-            spark, pages_from_pandas(spark, w1), path, 2
+        s1 = run_extraction_job(
+            spark, pages_from_pandas(spark, w1), path, num_partitions=2
         )
         assert s1 == 1
         assert it.read_table(spark, path).count() == 10
 
         # second wave: only the new urls extract, one new snapshot
         both = pages_from_pandas(
-            spark,
-            __import__("pandas").concat([w1, w2], ignore_index=True),
+            spark, pd.concat([w1, w2], ignore_index=True)
         )
-        s2 = extract_to_table(spark, both, path, 2)
+        s2 = run_extraction_job(spark, both, path, num_partitions=2)
         assert s2 == 2
         got = it.read_table(spark, path)
         assert got.count() == 20
         assert got.select("url").distinct().count() == 20
 
         # third run with nothing new: NO new snapshot (true no-op)
-        assert extract_to_table(spark, both, path, 2) is None
+        assert run_extraction_job(spark, both, path,
+                                  num_partitions=2) is None
         assert it.current_snapshot_id(path) == 2
 
-        # recrawl upsert: same urls re-extracted, still 20 rows, new
-        # snapshot; time travel to s2 still shows the old commit
-        s4 = extract_to_table(
+        # recrawl upsert: same urls re-crawled later and re-extracted,
+        # still 20 rows, new snapshot; time travel to s2 still shows
+        # the old commit
+        recrawl = w1.assign(warc_ts=w1["warc_ts"] + dt.timedelta(days=1))
+        s4 = run_extraction_job(
             spark,
-            pages_from_pandas(spark, w1),
+            pages_from_pandas(spark, recrawl),
             path,
-            2,
+            num_partitions=2,
             upsert=True,
         )
         assert s4 == 3
@@ -477,6 +481,65 @@ class TestRemoveOrphanFiles:
         assert got.where("host = 'new.com'").count() == 20
 
 
+class TestRelocatableTable:
+    def test_copied_table_reads_its_own_files(self, spark, tmp_path):
+        """Manifest paths are relative to the table root: a copy reads
+        every row after the original is gone, and the orphan sweep of
+        the copy finds nothing to delete."""
+        import shutil
+
+        orig, copy = str(tmp_path / "orig"), str(tmp_path / "copy")
+        it.create_table(_df(spark, 0, 100), orig, STATS)
+        it.append(_df(spark, 100, 150), orig, STATS)
+        shutil.copytree(orig, copy)
+        shutil.rmtree(orig)
+        got = it.read_table(spark, copy)
+        assert got.count() == got.select("doc_id").distinct().count() == 150
+        assert it.remove_orphan_files(copy, grace_sec=0) == {
+            "data_files_removed": 0, "snapshots_removed": 0,
+            "tmp_removed": 0, "staging_removed": 0}
+        assert it.read_table(spark, copy).count() == 150
+
+
+def test_orphan_sweep_removes_nested_staging_tree(spark, tmp_path):
+    """A Spark write killed mid-flight leaves a nested _temporary/ tree
+    in its staging dir; the sweep removes the whole tree."""
+    path = str(tmp_path / "t")
+    it.create_table(_df(spark, 0, 10), path, STATS)
+    nested = os.path.join(path, "_staging-x", "_temporary", "0")
+    os.makedirs(nested)
+    with open(os.path.join(nested, "part-0.parquet"), "wb") as fh:
+        fh.write(b"partial")
+    counts = it.remove_orphan_files(path, grace_sec=0)
+    assert counts["staging_removed"] == 1
+    assert not os.path.exists(os.path.join(path, "_staging-x"))
+    assert it.read_table(spark, path).count() == 10
+
+
+def test_merge_upsert_runs_incoming_plan_once(spark, tmp_path):
+    """merge_upsert stages the incoming rows once: the key range comes
+    from the staged footers and the matched keys from the staged
+    files, so an expensive incoming plan (a full extraction kernel
+    pass in production) is never re-run."""
+    path = str(tmp_path / "t")
+    it.create_table(_df(spark, 0, 100), path, STATS)
+    rows_seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            rows_seen.add(len(pdf))
+            yield pdf
+
+    incoming = _df(spark, 40, 60, host="new.com").mapInPandas(
+        counted, "doc_id long, host string, text string"
+    )
+    it.merge_upsert(spark, incoming, path, "doc_id", STATS)
+    assert rows_seen.value == 20
+    got = it.read_table(spark, path)
+    assert got.count() == got.select("doc_id").distinct().count() == 100
+    assert got.where("host = 'new.com'").count() == 20
+
+
 def test_commit_conflict_retry_succeeds(spark, tmp_path):
     """The optimistic-concurrency story end to end: writer B loses
     the race, sees CommitConflict, re-reads the advanced table and
@@ -496,7 +559,7 @@ def test_commit_conflict_retry_succeeds(spark, tmp_path):
             real_commit(
                 p,
                 it.read_snapshot(p)["manifest"]
-                + it._write_data_files(a, p, STATS),
+                + it.write_data_files(a, p, STATS),
                 parent,
                 "merge",
             )  # A slips in with B's expected parent

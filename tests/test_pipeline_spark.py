@@ -17,6 +17,7 @@ from pdf_extractor_spark.plans.pipeline import (
     metrics_from_extracted,
     partition_pages,
 )
+from pdf_extractor_spark.sources import icetable
 from pdf_extractor_spark.sources.pages import (
     pages_from_pandas,
     read_pages,
@@ -53,9 +54,9 @@ def test_resume_is_idempotent(spark, pages_df, tmp_path):
     pages = read_pages(spark, str(tmp_path / "pages"))
 
     run_extraction_job(spark, pages, out, num_partitions=4)
-    n1 = spark.read.parquet(out).count()
+    n1 = icetable.read_table(spark, out).count()
     run_extraction_job(spark, pages, out, num_partitions=4)
-    e = spark.read.parquet(out)
+    e = icetable.read_table(spark, out)
     assert e.count() == n1
     assert e.select("url").distinct().count() == n1
 
@@ -69,48 +70,62 @@ def test_resume_processes_only_missing(spark, tmp_path):
     run_extraction_job(
         spark, pages_from_pandas(spark, half), out, num_partitions=2
     )
-    n_half = spark.read.parquet(out).count()
+    n_half = icetable.read_table(spark, out).count()
     assert n_half == len(half)
 
     full = pages_from_pandas(spark, frame)
     todo = resume_filter(full, spark, out)
     assert todo.count() == len(frame) - len(half)
     run_extraction_job(spark, full, out, num_partitions=2)
-    e = spark.read.parquet(out)
+    e = icetable.read_table(spark, out)
     assert e.count() == len(frame)
     assert e.select("url").distinct().count() == len(frame)
+
+
+def _recrawl(page: pd.Series, days: int, marker: str) -> pd.Series:
+    """``page`` crawled again ``days`` later (earlier if negative),
+    now serving an HTML page whose text is :func:`_recrawl_text`."""
+    page = page.copy()
+    page["warc_ts"] = page["warc_ts"] + dt.timedelta(days=days)
+    page["html"] = (
+        f"<html><body><p>{_recrawl_text(marker)}</p></body></html>"
+    ).encode()
+    return page
+
+
+def _recrawl_text(marker: str) -> str:
+    # long enough to pass the extractor's short-text filter
+    return f"{marker} page body text entirely new content here"
 
 
 def test_upsert_replaces_only_newer_recrawls(spark, tmp_path):
     """MERGE WHEN MATCHED semantics (re-crawl): a newer warc_ts replaces
     the stored row, an older one loses, an unseen url inserts, and the
     url set stays unique."""
-    from pdf_extractor_spark.sources.pages import upsert_extracted
-
-    frame = build_pages_frame().iloc[:4]
+    frame = build_pages_frame().iloc[:4].reset_index(drop=True)
     out = str(tmp_path / "extracted")
     run_extraction_job(
         spark, pages_from_pandas(spark, frame), out, num_partitions=2
     )
-    base = spark.read.parquet(out)
+    base = icetable.read_table(spark, out)
     n0 = base.count()
     urls = sorted(r["url"] for r in base.select("url").collect())
     newer_url, older_url = urls[0], urls[1]
+    by_url = frame.set_index("url", drop=False)
 
-    newer = base.where(F.col("url") == newer_url).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-    ).withColumn("extracted_text", F.lit("RECRAWLED"))
-    older = base.where(F.col("url") == older_url).withColumn(
-        "warc_ts", F.col("warc_ts") - F.expr("INTERVAL 1 DAY")
-    ).withColumn("extracted_text", F.lit("STALE"))
-    fresh = base.where(F.col("url") == urls[2]).withColumn(
-        "url", F.lit("https://fixture.test/brand-new")
-    )
-    upsert_extracted(
-        spark, newer.unionByName(older).unionByName(fresh), out
+    fresh = _recrawl(by_url.loc[urls[2]], 0, "FRESH")
+    fresh["url"] = "https://fixture.test/brand-new"
+    batch = pd.DataFrame([
+        _recrawl(by_url.loc[newer_url], 1, "RECRAWLED"),
+        _recrawl(by_url.loc[older_url], -1, "STALE"),
+        fresh,
+    ])
+    run_extraction_job(
+        spark, pages_from_pandas(spark, batch), out, num_partitions=2,
+        upsert=True,
     )
 
-    after = spark.read.parquet(out)
+    after = icetable.read_table(spark, out)
     assert after.count() == n0 + 1
     assert after.select("url").distinct().count() == n0 + 1
     got = {
@@ -119,10 +134,82 @@ def test_upsert_replaces_only_newer_recrawls(spark, tmp_path):
             F.col("url").isin(newer_url, older_url)
         ).collect()
     }
-    assert got[newer_url] == "RECRAWLED"   # newer re-crawl wins
-    assert got[older_url] != "STALE"       # stored row beats older crawl
+    # newer re-crawl wins; the stored row beats an older crawl
+    assert got[newer_url] == _recrawl_text("RECRAWLED")
+    assert got[older_url] != _recrawl_text("STALE")
     assert after.where(F.col("url") == "https://fixture.test/brand-new") \
         .count() == 1                      # NOT MATCHED insert
+
+
+def test_noop_rerun_commits_nothing_and_keeps_metrics(spark, tmp_path):
+    """A re-run with nothing new makes no snapshot, stages nothing that
+    stays behind, and leaves the metrics table as the last run left
+    it."""
+    frame = build_pages_frame()
+    pages = pages_from_pandas(spark, frame)
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    assert run_extraction_job(spark, pages, out, metrics, 2) == 1
+    files = sorted(tmp_path.joinpath("out").rglob("*"))
+    before = {p: p.read_bytes() for p in tmp_path.joinpath(
+        "metrics").rglob("*") if p.is_file()}
+
+    assert run_extraction_job(spark, pages, out, metrics, 2) is None
+    assert icetable.current_snapshot_id(out) == 1
+    assert sorted(tmp_path.joinpath("out").rglob("*")) == files
+    assert {p: p.read_bytes() for p in tmp_path.joinpath(
+        "metrics").rglob("*") if p.is_file()} == before
+    total = spark.read.parquet(metrics).agg(F.sum("n_docs")).first()[0]
+    assert total == len(frame)
+
+
+def test_resumed_run_metrics_cover_only_added_rows(spark, tmp_path):
+    """Metrics are scoped to the run: a resumed run's rollup sums to
+    the rows that run committed, not to the whole table."""
+    frame = build_pages_frame()
+    done = frame.iloc[: len(frame) // 3]
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    for pages in (done, frame):
+        run_extraction_job(
+            spark, pages_from_pandas(spark, pages), out, metrics, 2
+        )
+    m = spark.read.parquet(metrics)
+    assert m.agg(F.sum("n_docs")).first()[0] == len(frame) - len(done)
+    assert icetable.read_table(spark, out).count() == len(frame)
+
+
+def test_commit_conflicts_when_table_advances_mid_job(
+    spark, tmp_path, monkeypatch
+):
+    """The job commits against the snapshot its resume filter read: a
+    writer that commits the same urls in between makes it fail with
+    CommitConflict rather than duplicate them, and the loser's staged
+    files do not stay behind."""
+    from pdf_extractor_spark.sources import pages as pages_mod
+
+    frame = build_pages_frame()
+    first, both = frame.iloc[:10], frame.iloc[:20]
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, pages_from_pandas(spark, first), out,
+                       num_partitions=2)
+    real = pages_mod.resume_filter
+
+    def racing(*args, **kwargs):
+        todo = real(*args, **kwargs)
+        monkeypatch.setattr(pages_mod, "resume_filter", real)
+        run_extraction_job(spark, pages_from_pandas(spark, both), out,
+                           num_partitions=2)  # the competing writer
+        return todo
+
+    monkeypatch.setattr(pages_mod, "resume_filter", racing)
+    with pytest.raises(icetable.CommitConflict):
+        run_extraction_job(spark, pages_from_pandas(spark, both), out,
+                           num_partitions=2)
+    got = icetable.read_table(spark, out)
+    assert got.count() == got.select("url").distinct().count() == 20
+    assert icetable.current_snapshot_id(out) == 2
+    listed = {e["path"] for e in icetable.read_snapshot(out)["manifest"]}
+    on_disk = {str(p) for p in tmp_path.joinpath("out", "data").iterdir()}
+    assert on_disk == listed
 
 
 def test_metrics_invariants(spark, pages_df):
@@ -305,23 +392,14 @@ def test_upsert_bootstrap_dedups_first_batch(spark, tmp_path):
     """First write (no existing store) must STILL resolve per-url
     winners: a batch carrying two crawls of one url keeps exactly the
     newest (code-review r2 finding)."""
-    from pdf_extractor_spark.sources.pages import upsert_extracted
-
-    frame = build_pages_frame().iloc[:2]
-    out = str(tmp_path / "extracted")
-    run_extraction_job(
-        spark, pages_from_pandas(spark, frame), out, num_partitions=2
-    )
-    seed = spark.read.parquet(out)
-    url0 = seed.select("url").orderBy("url").first()["url"]
-    one = seed.where(F.col("url") == url0)
-    newer = one.withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-    ).withColumn("extracted_text", F.lit("NEWEST"))
-    batch = one.unionByName(newer)
+    one = build_pages_frame().sort_values("url").iloc[0]
+    batch = pd.DataFrame([one, _recrawl(one, 1, "NEWEST")])
 
     fresh_out = str(tmp_path / "fresh")
-    upsert_extracted(spark, batch, fresh_out)
-    got = spark.read.parquet(fresh_out)
+    run_extraction_job(
+        spark, pages_from_pandas(spark, batch), fresh_out,
+        num_partitions=2, upsert=True,
+    )
+    got = icetable.read_table(spark, fresh_out)
     assert got.count() == 1
-    assert got.first()["extracted_text"] == "NEWEST"
+    assert got.first()["extracted_text"] == _recrawl_text("NEWEST")

@@ -27,6 +27,7 @@ def test_spark_submit_pyfiles_extraction_and_resume(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from pdf_extractor_spark.fixtures.corpus import build_pages_frame
+    from pdf_extractor_spark.sources.icetable import read_table
     from pdf_extractor_spark.sources.pages import (
         pages_from_pandas,
         write_pages,
@@ -68,7 +69,7 @@ def test_spark_submit_pyfiles_extraction_and_resume(spark, tmp_path):
             capture_output=True, text=True, timeout=600,
         )
         assert run.returncode == 0, (attempt, run.stderr[-2000:])
-        got = spark.read.parquet(out)
+        got = read_table(spark, out)
         n = got.count()
         assert n == got.select("url").distinct().count() == len(pdf), (
             attempt, n
