@@ -1136,6 +1136,8 @@ def span_dedup_report(
     """
     import hashlib as _hl
 
+    from ..plans.rowmap import map_rows
+
     base = docs.select("doc_id", _fixture_span_text().alias("text"))
     words = base.select("doc_id", F.split("text", " ").alias("ws"))
     wins = (
@@ -1162,33 +1164,21 @@ def span_dedup_report(
     )
     hot_set = frozenset(r["h"] for r in hot.collect())
 
-    def body(batches):
-        import pandas as pd  # noqa: PLC0415 (worker-side import)
+    def row(doc_id, text):
+        ws = (text or "").split(" ")
+        covered: set[int] = set()
+        n_dup = 0
+        if len(ws) >= k:
+            for s in range(0, len(ws) - k + 1, stride):
+                win = " ".join(ws[s : s + k])
+                if _hl.md5(win.encode()).hexdigest() in hot_set:
+                    covered.update(range(s, s + k))
+                    n_dup += 1
+        kept = [w for i, w in enumerate(ws) if i not in covered]
+        yield doc_id, len(kept), n_dup, " ".join(kept)
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_words_kept": [],
-                "n_dup_windows": [], "kept_text": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = (text or "").split(" ")
-                covered: set[int] = set()
-                n_dup = 0
-                if len(ws) >= k:
-                    for s in range(0, len(ws) - k + 1, stride):
-                        win = " ".join(ws[s : s + k])
-                        if _hl.md5(win.encode()).hexdigest() in hot_set:
-                            covered.update(range(s, s + k))
-                            n_dup += 1
-                kept = [w for i, w in enumerate(ws) if i not in covered]
-                out["doc_id"].append(int(doc_id))
-                out["n_words_kept"].append(len(kept))
-                out["n_dup_windows"].append(n_dup)
-                out["kept_text"].append(" ".join(kept))
-            yield pd.DataFrame(out)
-
-    return base.mapInPandas(
-        body,
+    return map_rows(
+        base, row,
         "doc_id long, n_words_kept long, n_dup_windows long, "
         "kept_text string",
     )

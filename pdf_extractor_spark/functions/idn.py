@@ -25,10 +25,9 @@ fixture entry keeps it narrow-map-only.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..plans.rowmap import map_rows
 
 # RFC 3492 §5 parameter values
 _BASE = 36
@@ -131,27 +130,15 @@ def idn_fold_report(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     """(doc_id, host_unicode, host_ascii): the ACE fold over the
     deterministic fixture hosts, Arrow-batched."""
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            hosts = [fixture_idn_host(int(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "host_unicode": hosts,
-                    "host_ascii": [host_to_ascii(h) for h in hosts],
-                }
-            )
-
     from pyspark.sql import functions as F
 
-    return (
-        docs.select("doc_id")
-        .repartition(num_partitions, F.col("doc_id"))
-        .mapInPandas(
-            body,
-            "doc_id long, host_unicode string, host_ascii string",
-        )
+    def row(doc_id):
+        host = fixture_idn_host(doc_id)
+        yield doc_id, host, host_to_ascii(host)
+
+    return map_rows(
+        docs.select("doc_id").repartition(num_partitions, F.col("doc_id")),
+        row, "doc_id long, host_unicode string, host_ascii string",
     )
 
 

@@ -57,13 +57,12 @@ the training-pipeline extension the task brief grades alongside §2.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.png_codec import png_encode, png_decode
+from ..plans.rowmap import map_rows
 from .multimodal import _partitioned_payloads
 
 #: member flip masks (XOR'd into the 60 md5 bits); even bits 2..58
@@ -137,27 +136,20 @@ def ahash64(pixels: np.ndarray) -> int:
 PHASH_SCHEMA = "doc_id long, phash long"
 
 
-def phash_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id, payload) → (doc_id, phash) — one
-    real PNG decode + aHash per row, one Python hop per Arrow batch."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "phash": [
-                    ahash64(png_decode(bytes(p))) for p in pdf["payload"]
-                ],
-            }
-        )
+def _phash_row(doc_id, payload):
+    """(doc_id, payload) → (doc_id, phash): one real PNG decode +
+    aHash per row."""
+    yield doc_id, ahash64(png_decode(bytes(payload)))
 
 
 def phash_signatures(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     """documents → (doc_id, phash): payload synthesis after the id
     repartition (layout rule shared with every multimodal leg via
     ``_partitioned_payloads``), then the Arrow decode+hash stage."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_phash_image
-    ).mapInPandas(phash_pandas, PHASH_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_phash_image),
+        _phash_row, PHASH_SCHEMA,
+    )
 
 
 PHASH_BANDS = 4  # 64 bits → 4 bands of 16: Hamming ≤ 3 ⟹ a band matches
@@ -284,26 +276,18 @@ def cross_format_report(
     doc_id partition; only (id, distance) rows flow on."""
     from ..operators.jpeg_codec import jpeg_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "hamming": [], "matched": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                png, jpg = fixture_cross_format(int(doc_id))
-                hp = ahash64(png_decode(png))
-                planes, _m = jpeg_decode(jpg)
-                hj = ahash64(planes[0][:, :, None])
-                d = bin((hp ^ hj) & (2**64 - 1)).count("1")
-                rows["doc_id"].append(int(doc_id))
-                rows["hamming"].append(d)
-                rows["matched"].append(d <= 3)
-            yield pd.DataFrame(rows).astype({"hamming": "int32"})
+    def row(doc_id):
+        png, jpg = fixture_cross_format(doc_id)
+        hp = ahash64(png_decode(png))
+        planes, _m = jpeg_decode(jpg)
+        hj = ahash64(planes[0][:, :, None])
+        d = bin((hp ^ hj) & (2**64 - 1)).count("1")
+        yield doc_id, d, d <= 3
 
     slim = docs.select("doc_id").repartition(
         num_partitions, F.col("doc_id")
     )
-    return slim.mapInPandas(body, CROSS_FORMAT_SCHEMA)
+    return map_rows(slim, row, CROSS_FORMAT_SCHEMA)
 
 
 def duck_cross_format_sql(source: str = "documents") -> str:

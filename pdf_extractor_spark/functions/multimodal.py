@@ -33,10 +33,7 @@ pipeline.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +44,7 @@ from ..operators.image_sniff import (
 )
 from ..operators.jpeg_markers import build_jpeg_header, jpeg_dimensions
 from ..operators.png_codec import PngError, png_decode, png_encode
+from ..plans.rowmap import map_rows
 
 DECODE_SCHEMA = (
     "doc_id long, width int, height int, channels int, "
@@ -77,27 +75,18 @@ def fixture_image(doc_id: int) -> bytes:
     return png_encode(pixels, row_filters=filters)
 
 
-def attach_binary_payload_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id) → (doc_id, payload). In production
-    this column IS the crawl's raw image bytes; the fixture builds a
-    real PNG per document (no external data)."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "payload": [
-                    fixture_image(int(d)) for d in pdf["doc_id"]
-                ],
-            }
-        )
+def _fixture_image_row(doc_id):
+    """(doc_id) → (doc_id, payload). In production this column IS the
+    crawl's raw image bytes; the fixture builds a real PNG per document
+    (no external data)."""
+    yield doc_id, fixture_image(doc_id)
 
 
 def attach_binary_payload(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, payload binary): a real PNG per row."""
-    return docs.select("doc_id").mapInPandas(
-        attach_binary_payload_pandas, "doc_id long, payload binary"
+    return map_rows(
+        docs.select("doc_id"), _fixture_image_row,
+        "doc_id long, payload binary",
     )
 
 
@@ -111,46 +100,23 @@ def _partitioned_payloads(
     cross an exchange. (Against real stored blobs the same holds via
     parquet bucketing / AQE split sizing on the scan.)"""
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "payload": [
-                        synth_fn(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
+    def payload_row(doc_id):
+        yield doc_id, synth_fn(doc_id)
 
     slim = docs.select("doc_id").repartition(
         num_partitions, F.col("doc_id")
     )
-    return slim.mapInPandas(body, "doc_id long, payload binary")
+    return map_rows(slim, payload_row, "doc_id long, payload binary")
 
 
-def decode_image_meta_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: Arrow batch of (doc_id, payload) → decoded
-    metadata frame. One Python hop per batch, never per row. The
-    emitted values are MEASURED from the decoded pixel array — the
-    oracle predicts them from the generation parameters, so the two
-    meet only if the codec is correct."""
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "width": [], "height": [], "channels": [],
-            "n_pixels": [], "pixel_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            px = png_decode(bytes(payload))
-            h, w, c = px.shape
-            rows["doc_id"].append(int(doc_id))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["channels"].append(c)
-            rows["n_pixels"].append(w * h)
-            rows["pixel_sum"].append(int(px.astype(np.int64).sum()))
-        yield pd.DataFrame(rows)
+def _decode_image_row(doc_id, payload):
+    """(doc_id, payload) → decoded metadata. The emitted values are
+    MEASURED from the decoded pixel array — the oracle predicts them
+    from the generation parameters, so the two meet only if the codec
+    is correct."""
+    px = png_decode(bytes(payload))
+    h, w, c = px.shape
+    yield doc_id, w, h, c, w * h, int(px.astype(np.int64).sum())
 
 
 def decode_image_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
@@ -160,9 +126,10 @@ def decode_image_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
 
     Layout rule (repartition before synthesis, payloads never cross
     an exchange) lives in :func:`_partitioned_payloads`."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_image
-    ).mapInPandas(decode_image_meta_pandas, DECODE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_image),
+        _decode_image_row, DECODE_SCHEMA,
+    )
 
 
 def decode_error_report(
@@ -172,22 +139,17 @@ def decode_error_report(
     error text instead of a task failure (the crawl regime — a corrupt
     image must never kill the batch)."""
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], "error": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    png_decode(bytes(payload))
-                    out["ok"].append(True)
-                    out["error"].append(None)
-                except PngError as exc:
-                    out["ok"].append(False)
-                    out["error"].append(str(exc))
-                out["doc_id"].append(int(doc_id))
-            yield pd.DataFrame(out)
+    def row(doc_id, payload):
+        try:
+            png_decode(bytes(payload))
+        except PngError as exc:
+            yield doc_id, False, str(exc)
+        else:
+            yield doc_id, True, None
 
-    return payloads.repartition(num_partitions, F.col("doc_id")).mapInPandas(
-        body, "doc_id long, ok boolean, error string"
+    return map_rows(
+        payloads.repartition(num_partitions, F.col("doc_id")),
+        row, "doc_id long, ok boolean, error string",
     )
 
 
@@ -224,30 +186,18 @@ FEATURES_SCHEMA = (
 )
 
 
-def image_features_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id, payload) → one row per channel with
-    per-channel sum/min/max MEASURED from the decoded pixel array.
-    The oracle predicts all three closed-form from the generation
-    parameters (exact integers — no float in the compared output), so
-    a channel mixup, plane transposition, or filter defect that
-    happens to preserve the global pixel_sum still breaks the hash."""
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "channel": [], "ch_sum": [], "ch_min": [],
-            "ch_max": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            px = png_decode(bytes(payload)).astype(np.int64)
-            for c in range(px.shape[2]):
-                plane = px[:, :, c]
-                rows["doc_id"].append(int(doc_id))
-                rows["channel"].append(c)
-                rows["ch_sum"].append(int(plane.sum()))
-                rows["ch_min"].append(int(plane.min()))
-                rows["ch_max"].append(int(plane.max()))
-        yield pd.DataFrame(rows)
+def _image_features_rows(doc_id, payload):
+    """(doc_id, payload) → one row per channel with per-channel
+    sum/min/max MEASURED from the decoded pixel array. The oracle
+    predicts all three closed-form from the generation parameters
+    (exact integers — no float in the compared output), so a channel
+    mixup, plane transposition, or filter defect that happens to
+    preserve the global pixel_sum still breaks the hash."""
+    px = png_decode(bytes(payload)).astype(np.int64)
+    for c in range(px.shape[2]):
+        plane = px[:, :, c]
+        yield (doc_id, c, int(plane.sum()), int(plane.min()),
+               int(plane.max()))
 
 
 def image_features(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
@@ -255,9 +205,10 @@ def image_features(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     verb of the multimodal battery, next to decode / resize /
     frame-sample). Layout rule shared via
     :func:`_partitioned_payloads`."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_image
-    ).mapInPandas(image_features_pandas, FEATURES_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_image),
+        _image_features_rows, FEATURES_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------- audio
@@ -300,27 +251,15 @@ def audio_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     Layout rule shared via :func:`_partitioned_payloads`."""
     from ..operators.wav_codec import wav_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "n_samples": [],
-                "channels": [], "sample_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, rate = wav_decode(bytes(payload))
-                n, c = samples.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["channels"].append(c)
-                rows["sample_sum"].append(
-                    int(samples.astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows)
+    def row(doc_id, payload):
+        samples, rate = wav_decode(bytes(payload))
+        n, c = samples.shape
+        yield doc_id, rate, n, c, int(samples.astype(np.int64).sum())
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_audio
-    ).mapInPandas(body, AUDIO_DECODE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_audio),
+        row, AUDIO_DECODE_SCHEMA,
+    )
 
 
 # ================================================= JPEG dimension sniff
@@ -346,23 +285,8 @@ JPEG_DIMS_SCHEMA = (
 )
 
 
-def jpeg_dims_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "width": [], "height": [],
-            "components": [], "progressive": [], "readable": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, c, prog, ok = jpeg_dimensions(bytes(payload))
-            rows["doc_id"].append(int(doc_id))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["components"].append(c)
-            rows["progressive"].append(prog)
-            rows["readable"].append(ok)
-        yield pd.DataFrame(rows)
+def _jpeg_dims_row(doc_id, payload):
+    yield (doc_id, *jpeg_dimensions(bytes(payload)))
 
 
 def jpeg_dims(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
@@ -371,9 +295,10 @@ def jpeg_dims(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     fetch+full-decode: marker-length walk only (ITU-T T.81 §B), no
     entropy decode; an Exif payload embedding a thumbnail's own SOF
     cannot fool it (a byte-pattern scan would report 16x16)."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg
-    ).mapInPandas(jpeg_dims_pandas, JPEG_DIMS_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_jpeg),
+        _jpeg_dims_row, JPEG_DIMS_SCHEMA,
+    )
 
 
 def duck_jpeg_dims_sql(source: str = "documents") -> str:
@@ -429,20 +354,8 @@ def fixture_mixed_image(doc_id: int) -> bytes:
 SNIFF_SCHEMA = "doc_id long, format string, width int, height int"
 
 
-def image_sniff_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "format": [], "width": [], "height": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            fmt, w, h = sniff_image(bytes(payload))
-            rows["doc_id"].append(int(doc_id))
-            rows["format"].append(fmt)
-            rows["width"].append(w)
-            rows["height"].append(h)
-        yield pd.DataFrame(rows)
+def _image_sniff_row(doc_id, payload):
+    yield (doc_id, *sniff_image(bytes(payload)))
 
 
 def image_sniff(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
@@ -450,9 +363,10 @@ def image_sniff(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     format header dims over a MIXED payload column: the first pass an
     image pipeline runs to size-filter and format-route a crawl
     before any decode. Unknown bytes come back ('unknown', -1, -1)."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_mixed_image
-    ).mapInPandas(image_sniff_pandas, SNIFF_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_mixed_image),
+        _image_sniff_row, SNIFF_SCHEMA,
+    )
 
 
 def duck_image_sniff_sql(source: str = "documents") -> str:
@@ -602,42 +516,25 @@ def video_frame_stats(
     from ..operators.avi_codec import avi_decode_luma_frames
     from ..operators.y4m_codec import y4m_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "fps_num": [],
-                "fps_den": [], "colorspace": [], "n_frames": [],
-                "n_sampled": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                if payload[:4] == b"RIFF":
-                    frames, meta = avi_decode_luma_frames(payload)
-                    cs = "mjpg"
-                else:
-                    frames, meta = y4m_decode(payload)
-                    cs = meta["colorspace"]
-                sampled = frames[::every]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["fps_num"].append(meta["fps_num"])
-                rows["fps_den"].append(meta["fps_den"])
-                rows["colorspace"].append(cs)
-                rows["n_frames"].append(len(frames))
-                rows["n_sampled"].append(len(sampled))
-                rows["luma_sum"].append(
-                    int(
-                        sum(
-                            fr.astype(np.int64).sum() for fr in sampled
-                        )
-                    )
-                )
-            yield pd.DataFrame(rows)
+    def row(doc_id, payload):
+        payload = bytes(payload)
+        if payload[:4] == b"RIFF":
+            frames, meta = avi_decode_luma_frames(payload)
+            cs = "mjpg"
+        else:
+            frames, meta = y4m_decode(payload)
+            cs = meta["colorspace"]
+        sampled = frames[::every]
+        yield (
+            doc_id, meta["width"], meta["height"], meta["fps_num"],
+            meta["fps_den"], cs, len(frames), len(sampled),
+            int(sum(fr.astype(np.int64).sum() for fr in sampled)),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_video
-    ).mapInPandas(body, VIDEO_STATS_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_video),
+        row, VIDEO_STATS_SCHEMA,
+    )
 
 
 def duck_video_stats_sql(source: str = "documents", every: int = 2) -> str:
@@ -785,45 +682,31 @@ def exif_harvest(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
         parse_exif_tiff,
     )
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "has_exif": [], "ok": [],
-                "byte_order": [], "orientation": [], "make": [],
-                "taken_at": [], "x_res_num": [], "x_res_den": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                tiff = exif_from_jpeg(bytes(payload))
-                vals: dict = {}
-                ok = True
-                if tiff is not None:
-                    try:
-                        vals = parse_exif_tiff(tiff)
-                    except ExifError:
-                        ok = False
-                        vals = {}
-                # sentinels, not NULLs: the cross-engine value compare
-                # (and the driver's value hash) treats NaN != NaN
-                rows["doc_id"].append(int(doc_id))
-                rows["has_exif"].append(tiff is not None)
-                rows["ok"].append(ok)
-                rows["byte_order"].append(vals.get("byte_order") or "")
-                rows["orientation"].append(vals.get("orientation") or -1)
-                rows["make"].append(vals.get("make") or "")
-                rows["taken_at"].append(vals.get("datetime") or "")
-                rows["x_res_num"].append(vals.get("x_res_num") or -1)
-                rows["x_res_den"].append(vals.get("x_res_den") or -1)
-            yield pd.DataFrame(rows).astype(
-                {
-                    "orientation": "int32",
-                    "x_res_num": "int64",
-                    "x_res_den": "int64",
-                }
-            )
+    def row(doc_id, payload):
+        tiff = exif_from_jpeg(bytes(payload))
+        vals: dict = {}
+        ok = True
+        if tiff is not None:
+            try:
+                vals = parse_exif_tiff(tiff)
+            except ExifError:
+                ok = False
+        # sentinels, not NULLs: the cross-engine value compare
+        # (and any hash over the values) treats NaN != NaN
+        yield (
+            doc_id, tiff is not None, ok,
+            vals.get("byte_order") or "",
+            vals.get("orientation") or -1,
+            vals.get("make") or "",
+            vals.get("datetime") or "",
+            vals.get("x_res_num") or -1,
+            vals.get("x_res_den") or -1,
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_exif_jpeg
-    ).mapInPandas(body, EXIF_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_exif_jpeg),
+        row, EXIF_SCHEMA,
+    )
 
 
 def duck_exif_harvest_sql(source: str = "documents") -> str:
@@ -901,31 +784,18 @@ def gif_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     exchange)."""
     from ..operators.gif_codec import gif_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "n_frames": [], "interlaced": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, meta = gif_decode(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["n_frames"].append(meta["n_frames"])
-                rows["interlaced"].append(meta["interlaced"])
-                rows["luma_sum"].append(
-                    int(
-                        sum(
-                            fr.astype(np.int64).sum() for fr in frames
-                        )
-                    )
-                )
-            yield pd.DataFrame(rows)
+    def row(doc_id, payload):
+        frames, meta = gif_decode(bytes(payload))
+        yield (
+            doc_id, meta["width"], meta["height"], meta["n_frames"],
+            meta["interlaced"],
+            int(sum(fr.astype(np.int64).sum() for fr in frames)),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_gif
-    ).mapInPandas(body, GIF_DECODE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_gif),
+        row, GIF_DECODE_SCHEMA,
+    )
 
 
 def duck_gif_decode_sql(source: str = "documents") -> str:
@@ -1001,29 +871,18 @@ def tiff_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     the layout here exercises."""
     from ..operators.tiff_codec import tiff_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "byte_order": [], "compression": [], "n_strips": [],
-                "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, meta = tiff_decode(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["byte_order"].append(meta["byte_order"])
-                rows["compression"].append(meta["compression"])
-                rows["n_strips"].append(meta["n_strips"])
-                rows["luma_sum"].append(
-                    int(img.astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows)
+    def row(doc_id, payload):
+        img, meta = tiff_decode(bytes(payload))
+        yield (
+            doc_id, meta["width"], meta["height"], meta["byte_order"],
+            meta["compression"], meta["n_strips"],
+            int(img.astype(np.int64).sum()),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_tiff
-    ).mapInPandas(body, TIFF_DECODE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_tiff),
+        row, TIFF_DECODE_SCHEMA,
+    )
 
 
 def duck_tiff_decode_sql(source: str = "documents") -> str:
@@ -1089,27 +948,17 @@ def bmp_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     measured luma sums vs a closed-form oracle."""
     from ..operators.bmp_codec import bmp_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "bits": [],
-                "top_down": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, meta = bmp_decode(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["bits"].append(meta["bits"])
-                rows["top_down"].append(meta["top_down"])
-                rows["luma_sum"].append(
-                    int(img.astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows)
+    def row(doc_id, payload):
+        img, meta = bmp_decode(bytes(payload))
+        yield (
+            doc_id, meta["width"], meta["height"], meta["bits"],
+            meta["top_down"], int(img.astype(np.int64).sum()),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_bmp
-    ).mapInPandas(body, BMP_DECODE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_bmp),
+        row, BMP_DECODE_SCHEMA,
+    )
 
 
 def duck_bmp_decode_sql(source: str = "documents") -> str:
@@ -1208,36 +1057,19 @@ def jpeg_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     decode leg (media bytes never cross an exchange)."""
     from ..operators.jpeg_codec import jpeg_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "n_components": [], "subsampled": [],
-                "progressive": [],
-                "y_sum": [], "cb_sum": [], "cr_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, meta = jpeg_decode(bytes(payload))
-                sums = [
-                    int(p.astype(np.int64).sum()) for p in planes
-                ]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["n_components"].append(meta["n_components"])
-                rows["subsampled"].append(meta["subsampled"])
-                rows["progressive"].append(meta["progressive"])
-                rows["y_sum"].append(sums[0])
-                rows["cb_sum"].append(sums[1] if len(sums) == 3 else 0)
-                rows["cr_sum"].append(sums[2] if len(sums) == 3 else 0)
-            yield pd.DataFrame(rows).astype({
-                "width": "int32", "height": "int32",
-                "n_components": "int32",
-            })
+    def row(doc_id, payload):
+        planes, meta = jpeg_decode(bytes(payload))
+        sums = [int(p.astype(np.int64).sum()) for p in planes]
+        cb, cr = sums[1:] if len(sums) == 3 else (0, 0)
+        yield (
+            doc_id, meta["width"], meta["height"], meta["n_components"],
+            meta["subsampled"], meta["progressive"], sums[0], cb, cr,
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_full
-    ).mapInPandas(body, JPEG_DECODE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_jpeg_full),
+        row, JPEG_DECODE_SCHEMA,
+    )
 
 
 def duck_jpeg_decode_sql(source: str = "documents") -> str:
@@ -1331,40 +1163,28 @@ def jpeg_thumbnail_meta(
     exchange, output rows are fixed-shape."""
     from ..operators.jpeg_codec import jpeg_decode, jpeg_encode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "thumb_width": [],
-                "thumb_height": [], "y_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, _meta = jpeg_decode(bytes(payload))
-                y = planes[0].astype(np.float64)
-                if y.shape[0] % 2:
-                    y = np.vstack([y, y[-1:]])
-                if y.shape[1] % 2:
-                    y = np.hstack([y, y[:, -1:]])
-                small = np.floor(
-                    (y[0::2, 0::2] + y[0::2, 1::2]
-                     + y[1::2, 0::2] + y[1::2, 1::2]) / 4.0
-                    + (0.5 + 1e-9)
-                ).astype(np.uint8)
-                tplanes, tmeta = jpeg_decode(
-                    jpeg_encode([small], quality=60)
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["thumb_width"].append(tmeta["width"])
-                rows["thumb_height"].append(tmeta["height"])
-                rows["y_sum"].append(
-                    int(tplanes[0].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows).astype({
-                "thumb_width": "int32", "thumb_height": "int32",
-            })
+    def row(doc_id, payload):
+        planes, _meta = jpeg_decode(bytes(payload))
+        y = planes[0].astype(np.float64)
+        if y.shape[0] % 2:
+            y = np.vstack([y, y[-1:]])
+        if y.shape[1] % 2:
+            y = np.hstack([y, y[:, -1:]])
+        small = np.floor(
+            (y[0::2, 0::2] + y[0::2, 1::2]
+             + y[1::2, 0::2] + y[1::2, 1::2]) / 4.0
+            + (0.5 + 1e-9)
+        ).astype(np.uint8)
+        tplanes, tmeta = jpeg_decode(jpeg_encode([small], quality=60))
+        yield (
+            doc_id, tmeta["width"], tmeta["height"],
+            int(tplanes[0].astype(np.int64).sum()),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_full
-    ).mapInPandas(body, THUMB_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_jpeg_full),
+        row, THUMB_SCHEMA,
+    )
 
 
 def duck_jpeg_thumbnail_sql(source: str = "documents") -> str:
@@ -1482,35 +1302,26 @@ def exif_strip_report(
             i += 2 + seglen
         return None
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "had_exif": [], "had_gps": [],
-                "bytes_removed": [], "y_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                tiff = _exif_of(payload)
-                had_gps = False
-                if tiff is not None:
-                    try:
-                        had_gps = parse_exif_tiff(tiff)["has_gps"]
-                    except ExifError:
-                        pass
-                stripped, removed = jpeg_strip_metadata(payload)
-                planes, _meta = jpeg_decode(stripped)
-                rows["doc_id"].append(int(doc_id))
-                rows["had_exif"].append(tiff is not None)
-                rows["had_gps"].append(bool(had_gps))
-                rows["bytes_removed"].append(removed)
-                rows["y_sum"].append(
-                    int(planes[0].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows).astype({"bytes_removed": "int32"})
+    def row(doc_id, payload):
+        payload = bytes(payload)
+        tiff = _exif_of(payload)
+        had_gps = False
+        if tiff is not None:
+            try:
+                had_gps = parse_exif_tiff(tiff)["has_gps"]
+            except ExifError:
+                pass
+        stripped, removed = jpeg_strip_metadata(payload)
+        planes, _meta = jpeg_decode(stripped)
+        yield (
+            doc_id, tiff is not None, bool(had_gps), removed,
+            int(planes[0].astype(np.int64).sum()),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_private
-    ).mapInPandas(body, EXIF_STRIP_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_jpeg_private),
+        row, EXIF_STRIP_SCHEMA,
+    )
 
 
 def duck_exif_strip_sql(source: str = "documents") -> str:
@@ -1585,37 +1396,21 @@ def g711_decode_meta(
     integer encode+decode arithmetic in SQL)."""
     from ..operators.wav_codec import wav_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "law": [], "n_samples": [],
-                "pcm_sum": [], "max_err": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                doc_id = int(doc_id)
-                pcm, _rate = wav_decode(bytes(payload))
-                n = pcm.shape[0]
-                i = np.arange(n, dtype=np.int64)
-                orig = (doc_id * 131 + i * 277) % 60001 - 30000
-                err = np.abs(
-                    pcm[:, 0].astype(np.int64) - orig
-                ).max()
-                rows["doc_id"].append(doc_id)
-                rows["law"].append(
-                    "ulaw" if doc_id % 2 == 0 else "alaw"
-                )
-                rows["n_samples"].append(n)
-                rows["pcm_sum"].append(
-                    int(pcm[:, 0].astype(np.int64).sum())
-                )
-                rows["max_err"].append(int(err))
-            yield pd.DataFrame(rows).astype({
-                "n_samples": "int32", "max_err": "int32",
-            })
+    def row(doc_id, payload):
+        pcm, _rate = wav_decode(bytes(payload))
+        n = pcm.shape[0]
+        i = np.arange(n, dtype=np.int64)
+        orig = (doc_id * 131 + i * 277) % 60001 - 30000
+        err = np.abs(pcm[:, 0].astype(np.int64) - orig).max()
+        yield (
+            doc_id, "ulaw" if doc_id % 2 == 0 else "alaw", n,
+            int(pcm[:, 0].astype(np.int64).sum()), int(err),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_g711_wav
-    ).mapInPandas(body, G711_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_g711_wav),
+        row, G711_SCHEMA,
+    )
 
 
 def duck_g711_sql(source: str = "documents") -> str:
@@ -1730,25 +1525,17 @@ def jpeg_salvage_meta(
     mis-ran the refinement bit machine, lands on different pixels."""
     from ..operators.jpeg_codec import jpeg_decode_salvage
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "scans_done": [], "salvaged": [],
-                "y_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, meta = jpeg_decode_salvage(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["scans_done"].append(meta["n_scans"])
-                rows["salvaged"].append(meta["salvaged"])
-                rows["y_sum"].append(
-                    int(planes[0].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows).astype({"scans_done": "int32"})
+    def row(doc_id, payload):
+        planes, meta = jpeg_decode_salvage(bytes(payload))
+        yield (
+            doc_id, meta["n_scans"], meta["salvaged"],
+            int(planes[0].astype(np.int64).sum()),
+        )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_truncated
-    ).mapInPandas(body, JPEG_SALVAGE_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_jpeg_truncated),
+        row, JPEG_SALVAGE_SCHEMA,
+    )
 
 
 def duck_jpeg_salvage_sql(source: str = "documents") -> str:
@@ -1832,32 +1619,18 @@ def ico_decode_meta(
     transparency counts vs the closed-form oracle."""
     from ..operators.ico_codec import ico_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "idx": [], "kind": [], "width": [],
-                "height": [], "luma_sum": [], "transparent_px": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for idx, ent in enumerate(ico_decode(bytes(payload))):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["idx"].append(idx)
-                    rows["kind"].append(ent["kind"])
-                    rows["width"].append(ent["width"])
-                    rows["height"].append(ent["height"])
-                    rows["luma_sum"].append(
-                        int(ent["luma"].astype(np.int64).sum())
-                    )
-                    rows["transparent_px"].append(
-                        ent["transparent_px"]
-                    )
-            yield pd.DataFrame(rows).astype({
-                "idx": "int32", "width": "int32", "height": "int32",
-            })
+    def rows(doc_id, payload):
+        for idx, ent in enumerate(ico_decode(bytes(payload))):
+            yield (
+                doc_id, idx, ent["kind"], ent["width"], ent["height"],
+                int(ent["luma"].astype(np.int64).sum()),
+                ent["transparent_px"],
+            )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_ico
-    ).mapInPandas(body, ICO_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_ico),
+        rows, ICO_SCHEMA,
+    )
 
 
 def duck_ico_sql(source: str = "documents") -> str:
@@ -1932,30 +1705,18 @@ def apng_decode_meta(
     unit test."""
     from ..operators.apng_codec import apng_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame": [], "n_frames": [],
-                "num_plays": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, meta = apng_decode(bytes(payload))
-                for k, fr in enumerate(frames):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame"].append(k)
-                    rows["n_frames"].append(meta["n_frames"])
-                    rows["num_plays"].append(meta["num_plays"])
-                    rows["luma_sum"].append(
-                        int(fr[:, :, 0].astype(np.int64).sum())
-                    )
-            yield pd.DataFrame(rows).astype({
-                "frame": "int32", "n_frames": "int32",
-                "num_plays": "int32",
-            })
+    def rows(doc_id, payload):
+        frames, meta = apng_decode(bytes(payload))
+        for k, fr in enumerate(frames):
+            yield (
+                doc_id, k, meta["n_frames"], meta["num_plays"],
+                int(fr[:, :, 0].astype(np.int64).sum()),
+            )
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_apng
-    ).mapInPandas(body, APNG_SCHEMA)
+    return map_rows(
+        _partitioned_payloads(docs, num_partitions, fixture_apng),
+        rows, APNG_SCHEMA,
+    )
 
 
 def duck_apng_sql(source: str = "documents") -> str:

@@ -23,14 +23,12 @@ when a consumer aggregates (the id is extracted before any exchange).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.pdf_generator import PageSpec, build_pdf
 from ..operators.pdf_tokenizer import parse_pdf
-from ..sources.docwrap import _spread
+from ..plans.rowmap import map_rows, spread
 
 _TARGET_ID_RE = re.compile(r"/page/(\d+)$")
 
@@ -66,32 +64,20 @@ def wrap_pdf_links(text: str, doc_id: int) -> bytes:
 PDF_LINKS_SCHEMA = "doc_id long, target_id long"
 
 
-def _links_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_links(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for page in doc.pages:
-                for url in page.links:
-                    m = _TARGET_ID_RE.search(url)
-                    if not m:
-                        continue
-                    rows.append(
-                        {"doc_id": int(doc_id),
-                         "target_id": int(m.group(1))}
-                    )
-        yield pd.DataFrame(rows, columns=["doc_id", "target_id"])
+def _link_rows(doc_id, text):
+    for page in parse_pdf(wrap_pdf_links(text, doc_id)).pages:
+        for url in page.links:
+            m = _TARGET_ID_RE.search(url)
+            if m:
+                yield doc_id, int(m.group(1))
 
 
 def pdf_links(docs: DataFrame,
               num_partitions: int | None = None) -> DataFrame:
     """(doc_id, target_id) — URI-annotation edges recovered from PDF
     pages by the real tokenizer."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _links_iter, PDF_LINKS_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _link_rows, PDF_LINKS_SCHEMA
     )
 
 

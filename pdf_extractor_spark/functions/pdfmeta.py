@@ -28,14 +28,11 @@ metadata bytes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.pdf_generator import PageSpec, build_pdf
 from ..operators.pdf_tokenizer import parse_pdf
-from ..sources.docwrap import _spread
+from ..plans.rowmap import map_rows, spread
 
 
 def wrap_pdf_meta(text: str, doc_id: int) -> bytes:
@@ -77,36 +74,15 @@ PDF_META_SCHEMA = (
     "n_outline long, max_depth long, has_cycle boolean"
 )
 
-_COLS = [
-    "doc_id", "title", "author", "producer",
-    "n_outline", "max_depth", "has_cycle",
-]
-
-
-def _meta_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_meta(text, int(doc_id))
-            doc = parse_pdf(payload)
-            depths = [d for d, _t in doc.outline]
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "title": doc.info.get("Title", ""),
-                    "author": doc.info.get("Author", ""),
-                    "producer": doc.info.get("Producer", ""),
-                    "n_outline": len(doc.outline),
-                    "max_depth": max(depths) if depths else -1,
-                    "has_cycle": any(
-                        "sibling ring" in e["message"]
-                        for e in doc.errors
-                    ),
-                }
-            )
-        yield pd.DataFrame(rows, columns=_COLS)
+def _meta_row(doc_id, text):
+    doc = parse_pdf(wrap_pdf_meta(text, doc_id))
+    depths = [d for d, _t in doc.outline]
+    yield (
+        doc_id, doc.info.get("Title", ""), doc.info.get("Author", ""),
+        doc.info.get("Producer", ""), len(doc.outline),
+        max(depths) if depths else -1,
+        any("sibling ring" in e["message"] for e in doc.errors),
+    )
 
 
 def pdf_metadata(docs: DataFrame,
@@ -114,8 +90,8 @@ def pdf_metadata(docs: DataFrame,
     """(doc_id, title, author, producer, n_outline, max_depth,
     has_cycle) — /Info + outline metadata recovered from PDF
     documents by the real tokenizer."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _meta_iter, PDF_META_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _meta_row, PDF_META_SCHEMA
     )
 
 
@@ -181,25 +157,13 @@ SECTION_DOC_SCHEMA = (
 )
 
 
-def _sections_iter(
-    batches: "Iterator[pd.DataFrame]",
-) -> "Iterator[pd.DataFrame]":
+def _sections_row(doc_id, text):
     from ..operators.document import extract_document
 
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_sections(text, int(doc_id))
-            rec = extract_document(payload)
-            doc = parse_pdf(payload)
-            rows.append({
-                "doc_id": int(doc_id),
-                "extracted_text": rec["extracted_text"],
-                "titles": [t for _d, t in doc.outline],
-            })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "extracted_text", "titles"]
-        )
+    payload = wrap_pdf_sections(text, doc_id)
+    rec = extract_document(payload)
+    titles = [t for _d, t in parse_pdf(payload).outline]
+    yield doc_id, rec["extracted_text"], titles
 
 
 def section_chunks(docs: DataFrame,
@@ -216,8 +180,8 @@ def section_chunks(docs: DataFrame,
     exchange after the doc-id spread at all."""
     from pyspark.sql import functions as F
 
-    base = _spread(docs, num_partitions).mapInPandas(
-        _sections_iter, SECTION_DOC_SCHEMA
+    base = map_rows(
+        spread(docs, num_partitions), _sections_row, SECTION_DOC_SCHEMA
     )
     ex = base.select(
         "doc_id", "extracted_text", "titles",
@@ -295,23 +259,9 @@ def wrap_pdf_form(text: str, doc_id: int) -> bytes:
 PDF_FORM_SCHEMA = "doc_id long, field_name string, field_value string"
 
 
-def _form_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_form(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for name, value in doc.form_fields:
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "field_name": name,
-                    "field_value": value,
-                })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "field_name", "field_value"]
-        )
+def _form_rows(doc_id, text):
+    for name, value in parse_pdf(wrap_pdf_form(text, doc_id)).form_fields:
+        yield doc_id, name, value
 
 
 def pdf_form_fields(docs: DataFrame,
@@ -321,8 +271,8 @@ def pdf_form_fields(docs: DataFrame,
     (ISO 32000 §12.7) — invisible to text extraction, which is why a
     corpus pipeline harvests it as its own pass over the same
     resolved objects."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _form_iter, PDF_FORM_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _form_rows, PDF_FORM_SCHEMA
     )
 
 
@@ -376,23 +326,10 @@ def wrap_pdf_attachments(text: str, doc_id: int) -> bytes:
 PDF_ATTACH_SCHEMA = "doc_id long, filename string, content string"
 
 
-def _attach_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_attachments(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for fname, content in doc.attachments:
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "filename": fname,
-                    "content": content.decode("utf-8", "replace"),
-                })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "filename", "content"]
-        )
+def _attach_rows(doc_id, text):
+    doc = parse_pdf(wrap_pdf_attachments(text, doc_id))
+    for fname, content in doc.attachments:
+        yield doc_id, fname, content.decode("utf-8", "replace")
 
 
 def pdf_attachments(docs: DataFrame,
@@ -401,8 +338,8 @@ def pdf_attachments(docs: DataFrame,
     the /EmbeddedFiles name tree by the real tokenizer.  Attachments
     are how e-invoice XML and source data travel inside PDFs —
     payload text extraction never sees."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _attach_iter, PDF_ATTACH_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _attach_rows, PDF_ATTACH_SCHEMA
     )
 
 
@@ -471,32 +408,15 @@ PDF_FULL_META_SCHEMA = (
     "doc_id long, title string, n_outline long, has_cycle boolean, "
     "n_form_fields long, n_attachments long, n_links long"
 )
-_FULL_COLS = [
-    "doc_id", "title", "n_outline", "has_cycle",
-    "n_form_fields", "n_attachments", "n_links",
-]
-
-
-def _full_meta_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_everything(text, int(doc_id))
-            doc = parse_pdf(payload)  # ONE parse, every surface
-            rows.append({
-                "doc_id": int(doc_id),
-                "title": doc.info.get("Title", ""),
-                "n_outline": len(doc.outline),
-                "has_cycle": any(
-                    "sibling ring" in e["message"] for e in doc.errors
-                ),
-                "n_form_fields": len(doc.form_fields),
-                "n_attachments": len(doc.attachments),
-                "n_links": sum(len(p.links) for p in doc.pages),
-            })
-        yield pd.DataFrame(rows, columns=_FULL_COLS)
+def _full_meta_row(doc_id, text):
+    # ONE parse, every surface
+    doc = parse_pdf(wrap_pdf_everything(text, doc_id))
+    yield (
+        doc_id, doc.info.get("Title", ""), len(doc.outline),
+        any("sibling ring" in e["message"] for e in doc.errors),
+        len(doc.form_fields), len(doc.attachments),
+        sum(len(p.links) for p in doc.pages),
+    )
 
 
 def pdf_full_metadata(docs: DataFrame,
@@ -506,8 +426,8 @@ def pdf_full_metadata(docs: DataFrame,
     extraction pass, zero extra scans"), demonstrated as a single
     Arrow stage whose output row carries /Info, outline, AcroForm,
     attachment and link-annotation results simultaneously."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _full_meta_iter, PDF_FULL_META_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _full_meta_row, PDF_FULL_META_SCHEMA
     )
 
 
@@ -561,32 +481,14 @@ PDF_XMP_SCHEMA = (
     "doc_id long, xmp_title string, creator string, "
     "create_date string, has_xmp boolean, agrees_info boolean"
 )
-_XMP_COLS = [
-    "doc_id", "xmp_title", "creator", "create_date",
-    "has_xmp", "agrees_info",
-]
-
-
-def _xmp_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_xmp(text, int(doc_id))
-            doc = parse_pdf(payload)
-            rows.append({
-                "doc_id": int(doc_id),
-                "xmp_title": doc.xmp.get("title", ""),
-                "creator": doc.xmp.get("creator", ""),
-                "create_date": doc.xmp.get("create_date", ""),
-                "has_xmp": bool(doc.xmp),
-                "agrees_info": (
-                    doc.xmp.get("title") == doc.info.get("Title")
-                    if doc.xmp else False
-                ),
-            })
-        yield pd.DataFrame(rows, columns=_XMP_COLS)
+def _xmp_row(doc_id, text):
+    doc = parse_pdf(wrap_pdf_xmp(text, doc_id))
+    xmp = doc.xmp
+    agrees = xmp.get("title") == doc.info.get("Title") if xmp else False
+    yield (
+        doc_id, xmp.get("title", ""), xmp.get("creator", ""),
+        xmp.get("create_date", ""), bool(xmp), agrees,
+    )
 
 
 def pdf_xmp_metadata(docs: DataFrame,
@@ -594,8 +496,8 @@ def pdf_xmp_metadata(docs: DataFrame,
     """(doc_id, xmp_title, creator, create_date, has_xmp,
     agrees_info) — the modern metadata channel beside legacy /Info,
     with the stale-Info disagreement surfaced as an audit flag."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _xmp_iter, PDF_XMP_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _xmp_row, PDF_XMP_SCHEMA
     )
 
 
@@ -660,26 +562,9 @@ PDF_ANNOT_SCHEMA = (
 )
 
 
-def _annot_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_annots(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for page, subtype, contents, author in doc.annotations:
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "page": page,
-                    "subtype": subtype,
-                    "contents": contents,
-                    "author": author,
-                })
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "page", "subtype", "contents", "author"],
-        )
+def _annot_rows(doc_id, text):
+    for annot in parse_pdf(wrap_pdf_annots(text, doc_id)).annotations:
+        yield (doc_id, *annot)
 
 
 def pdf_annotations(docs: DataFrame,
@@ -690,8 +575,8 @@ def pdf_annotations(docs: DataFrame,
     invisible to text extraction — and carry reviewer names and
     remarks a corpus pipeline either harvests deliberately or scrubs
     as PII; either way it must SEE them first."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _annot_iter, PDF_ANNOT_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _annot_rows, PDF_ANNOT_SCHEMA
     )
 
 

@@ -30,29 +30,8 @@ from .png_codec import (
     _COLOR_TYPE,
     _CHANNELS,
     _serialize_scanlines,
-    _unfilter_row,
+    _unfilter_block,
 )
-
-
-def _unfilter(raw: bytes, w: int, h: int, c: int) -> np.ndarray:
-    stride = w * c
-    if len(raw) != h * (stride + 1):
-        raise PngError(
-            f"frame data length {len(raw)} != expected "
-            f"{h * (stride + 1)}"
-        )
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    mv = memoryview(raw)
-    for y in range(h):
-        rowstart = y * (stride + 1)
-        ftype = mv[rowstart]
-        row = np.frombuffer(
-            mv, dtype=np.uint8, count=stride, offset=rowstart + 1
-        )
-        prev = _unfilter_row(ftype, row, prev, c)
-        out[y] = prev
-    return out.reshape(h, w, c)
 
 
 def apng_encode(
@@ -207,7 +186,7 @@ def apng_decode(
             raise PngError(
                 f"frame {i} inflate failed: {exc}"
             ) from exc
-        region = _unfilter(raw, fw, fh, c)
+        region = _unfilter_block(memoryview(raw), fh, fw, c)
         canvas[fy:fy + fh, fx:fx + fw] = region
         frames.append(canvas.copy())
         if dispose == 1:

@@ -157,20 +157,28 @@ def _collect_frames(
     data: bytes,
     pos: int,
     end: int,
+    vid: bytes | None,
+    aid: bytes | None,
     frames: list[bytes],
-    audio: list[bytes] | None = None,
+    audio: list[bytes],
 ) -> None:
-    """Video (and, when requested, audio) chunks from a movi body,
-    descending into ``LIST 'rec '`` groups (interleave muxers batch
-    one frame-time of chunks per rec list); JUNK/other chunks are
-    skipped."""
+    """Video and audio chunks from a movi body, descending into
+    ``LIST 'rec '`` groups (interleave muxers batch one frame-time of
+    chunks per rec list); JUNK/other chunks are skipped. Chunk ids
+    lead with the two-digit stream number, the strl's position in
+    hdrl: ``vid`` + ``dc``/``db`` is video, ``aid`` + ``wb`` audio
+    (any stream's ``wb`` when no auds header named one, so such a
+    chunk is diagnosed, not dropped)."""
     for fourcc, body, size in _iter_chunks(data, pos, end):
-        if fourcc in (b"00dc", b"00db"):
+        sid, kind = fourcc[:2], fourcc[2:]
+        if sid == vid and kind in (b"dc", b"db"):
             frames.append(data[body : body + size])
-        elif audio is not None and fourcc[2:4] == b"wb":
+        elif kind == b"wb" and aid in (None, sid):
             audio.append(data[body : body + size])
         elif fourcc == b"LIST" and data[body : body + 4] == b"rec ":
-            _collect_frames(data, body + 4, body + size, frames, audio)
+            _collect_frames(
+                data, body + 4, body + size, vid, aid, frames, audio
+            )
 
 
 def _demux(
@@ -178,10 +186,11 @@ def _demux(
 ) -> tuple[list[bytes], list[bytes], dict]:
     """Shared container walk → (video chunks, audio chunks, meta).
 
-    Frames come from the ``00dc``/``00db`` chunks of the movi list in
-    stream order — the idx1 index, when present, is cross-checked but
-    the movi walk is authoritative (real files ship broken indexes;
-    broken MOVI data is unrecoverable either way)."""
+    Frames come from the ``NNdc``/``NNdb`` chunks of the movi list,
+    ``NN`` the vids stream's number, in stream order — the idx1
+    index, when present, is cross-checked but the movi walk is
+    authoritative (real files ship broken indexes; broken MOVI data
+    is unrecoverable either way)."""
     if len(payload) < 12 or payload[:4] != b"RIFF":
         raise AviError("not a RIFF file")
     (riff_size,) = struct.unpack_from("<I", payload, 4)
@@ -192,6 +201,7 @@ def _demux(
     rate, scale, declared = 0, 0, -1
     handler = b""
     a_tag = a_chan = a_rate = 0
+    vid = aid = None
     frames: list[bytes] = []
     audio: list[bytes] = []
     n_indexed = -1
@@ -199,6 +209,7 @@ def _demux(
         if fourcc == b"LIST":
             ltype = payload[body : body + 4]
             if ltype == b"hdrl":
+                n_strl = 0
                 for f2, b2, s2 in _iter_chunks(
                     payload, body + 4, body + size
                 ):
@@ -220,6 +231,7 @@ def _demux(
                                     raise AviError("short strh")
                                 s_type = payload[b3 : b3 + 4]
                                 if s_type == b"vids" and not handler:
+                                    vid = b"%02d" % n_strl
                                     handler = payload[b3 + 4 : b3 + 8]
                                     scale, rate = struct.unpack_from(
                                         "<2I", payload, b3 + 20
@@ -239,15 +251,18 @@ def _demux(
                                         "<2HI", payload, b3
                                     )
                                 )
+                                aid = b"%02d" % n_strl
+                        n_strl += 1
             elif ltype == b"movi":
                 _collect_frames(
-                    payload, body + 4, body + size, frames, audio
+                    payload, body + 4, body + size, vid, aid, frames,
+                    audio,
                 )
-        elif fourcc == b"idx1":
+        elif fourcc == b"idx1" and vid is not None:
             n_indexed = sum(
                 1
                 for off in range(body, body + size - 15, 16)
-                if payload[off : off + 4] in (b"00dc", b"00db")
+                if payload[off : off + 4] in (vid + b"dc", vid + b"db")
             )
     if not handler:
         raise AviError("no vids stream header")

@@ -35,9 +35,11 @@ import re
 from dataclasses import dataclass, field
 from functools import lru_cache
 
+import numpy as np
 import pandas as pd
 
 from .charclass import is_wide_char
+from .png_codec import _unfilter_row
 from .words import Words, empty_words
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
@@ -409,38 +411,18 @@ def _apply_predictor(data: bytes, parms: dict[bytes, int]) -> bytes:
             for i in range(bpp, rowlen):
                 out[r + i] = (out[r + i] + out[r + i - bpp]) & 0xFF
         return bytes(out)
-    # PNG predictors: per-row filter-type byte
+    # PNG predictors: per-row filter-type byte, the PNG codec's row
+    # reconstruction. A short final row is zero-padded, then cut back:
+    # every filter reads only bytes at or left of i and the row above,
+    # so the padding never reaches the kept prefix.
     stride = rowlen + 1
     out = bytearray()
-    prev = bytearray(rowlen)
+    prev = np.zeros(rowlen, dtype=np.uint8)
     for r in range(0, len(data), stride):
-        ft = data[r]
-        row = bytearray(data[r + 1 : r + 1 + rowlen])
-        if ft == 1:    # Sub
-            for i in range(bpp, rowlen):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(rowlen):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(rowlen):
-                left = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + (left + prev[i]) // 2) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(rowlen):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c
-                )
-                row[i] = (row[i] + pr) & 0xFF
-        elif ft != 0:
-            raise ValueError(f"unknown PNG filter type {ft}")
-        out += row
-        prev = row
+        row = bytes(data[r + 1 : r + stride])
+        filt = np.frombuffer(row.ljust(rowlen, b"\0"), dtype=np.uint8)
+        prev = _unfilter_row(data[r], filt, prev, bpp)
+        out += prev[: len(row)].tobytes()
     return bytes(out)
 
 

@@ -95,16 +95,17 @@ def _unfilter_row(
     ftype: int, filt: np.ndarray, prev: np.ndarray, bpp: int
 ) -> np.ndarray:
     """Reconstruct one scanline (decoder side). None/Up are whole-row
-    vector ops; Sub is a per-channel prefix sum (addition mod 256
-    distributes over cumsum); Average/Paeth carry a serial dependency
-    along x, so they run as tight byte loops over Python ints —
-    measured faster than per-pixel NumPy ops, whose tiny-array
-    overhead dominates at 1-4 byte lanes."""
+    vector ops (uint8 addition wraps mod 256); Sub is a per-channel
+    prefix sum (addition mod 256 distributes over cumsum);
+    Average/Paeth carry a serial dependency along x, so they run as
+    tight byte loops over Python ints — measured faster than
+    per-pixel NumPy ops, whose tiny-array overhead dominates at 1-4
+    byte lanes."""
     n = filt.shape[0]
     if ftype == 0:
         return filt.copy()
     if ftype == 2:
-        return ((filt.astype(np.int32) + prev) % 256).astype(np.uint8)
+        return filt + prev
     if ftype == 1:
         cols = filt.reshape(-1, bpp).astype(np.int64)
         return (np.cumsum(cols, axis=0) % 256).astype(np.uint8).reshape(n)
@@ -137,6 +138,27 @@ def _unfilter_row(
     else:
         raise PngError(f"bad filter type {ftype}")
     return np.frombuffer(bytes(out), dtype=np.uint8)
+
+
+def _unfilter_block(buf: memoryview, h: int, w: int, c: int) -> np.ndarray:
+    """Reconstruct ``h`` filtered scanlines of ``w`` pixels × ``c``
+    bytes, each led by its filter-type byte → (h, w, c) uint8."""
+    stride = w * c
+    if len(buf) != h * (stride + 1):
+        raise PngError(
+            f"filtered data length {len(buf)} != "
+            f"expected {h * (stride + 1)}"
+        )
+    out = np.zeros((h, stride), dtype=np.uint8)
+    prev = np.zeros(stride, dtype=np.uint8)
+    for y in range(h):
+        rowstart = y * (stride + 1)
+        filt_row = np.frombuffer(
+            buf, dtype=np.uint8, count=stride, offset=rowstart + 1
+        )
+        prev = _unfilter_row(buf[rowstart], filt_row, prev, c)
+        out[y] = prev
+    return out.reshape(h, w, c)
 
 
 def png_encode(
@@ -294,31 +316,8 @@ def png_decode(data: bytes) -> np.ndarray:
     except zlib.error as exc:
         raise PngError(f"IDAT inflate failed: {exc}") from exc
 
-    def unfilter_block(
-        buf: memoryview, bh: int, bw: int
-    ) -> np.ndarray:
-        stride = bw * c
-        out = np.zeros((bh, stride), dtype=np.uint8)
-        prev = np.zeros(stride, dtype=np.uint8)
-        for y in range(bh):
-            rowstart = y * (stride + 1)
-            ftype = buf[rowstart]
-            filt_row = np.frombuffer(
-                buf, dtype=np.uint8, count=stride,
-                offset=rowstart + 1,
-            )
-            prev = _unfilter_row(ftype, filt_row, prev, c)
-            out[y] = prev
-        return out.reshape(bh, bw, c)
-
     if interlace == 0:
-        stride = w * c
-        if len(raw) != h * (stride + 1):
-            raise PngError(
-                f"decoded length {len(raw)} != "
-                f"expected {h * (stride + 1)}"
-            )
-        out = unfilter_block(memoryview(raw), h, w)
+        out = _unfilter_block(memoryview(raw), h, w, c)
     else:
         # Adam7 (§8.2): per-pass filtered blocks, previous row
         # resets at each pass; pixels scatter back by the pass grid
@@ -332,8 +331,8 @@ def png_decode(data: bytes) -> np.ndarray:
             need = ph * (pw * c + 1)
             if off + need > len(raw):
                 raise PngError("truncated interlaced pass data")
-            out[y0::dy, x0::dx] = unfilter_block(
-                mv[off:off + need], ph, pw
+            out[y0::dy, x0::dx] = _unfilter_block(
+                mv[off:off + need], ph, pw, c
             )
             off += need
         if off != len(raw):

@@ -13,14 +13,13 @@ documents``.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG
 from ..operators.document import extract_document
 from ..operators.pdf_generator import PageSpec, build_pdf, text_advance
+from ..plans.rowmap import map_rows, spread
 
 ROUNDTRIP_SCHEMA = "doc_id long, extracted_text string"
 
@@ -184,60 +183,31 @@ def wrap_pdf_layout(text: str, doc_id: int) -> bytes:
                      ocg_layers=ocg_layers, encrypt=encrypt)
 
 
-def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
-    """Hash-repartition by doc id before the Arrow stage — a small
-    parquet table arrives as ONE input split, which would serialize the
-    whole extraction onto one task. Same layout rule as the production
-    pipeline's url-hash repartition (plans/pipeline.py)."""
-    n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
-    from pyspark.sql import functions as F
-
-    return docs.select("doc_id", "text").repartition(n, F.col("doc_id"))
-
-
-def _html_transport_iter(batches: Iterator[pd.DataFrame]):
-    for pdf in batches:
-        texts = [
-            extract_document(
-                wrap_html_transport(t, int(d)), DEFAULT_CONFIG
-            )["extracted_text"]
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(),
-             "extracted_text": texts}
-        )
+def _html_transport_row(doc_id, text):
+    payload = wrap_html_transport(text, doc_id)
+    yield doc_id, extract_document(payload, DEFAULT_CONFIG)["extracted_text"]
 
 
 def html_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """documents → synth HTML (transport container rotating plain /
     HTTP+gzip / HTTP+chunked / BOM'd UTF-16LE with a lying meta /
     bare-gzip by doc_id) → extract → (doc_id, extracted_text)."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _html_transport_iter, ROUNDTRIP_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _html_transport_row, ROUNDTRIP_SCHEMA
     )
 
 
-def _pdf_layout_iter(batches: Iterator[pd.DataFrame]):
-    for pdf in batches:
-        texts = [
-            extract_document(
-                wrap_pdf_layout(t, int(d)), DEFAULT_CONFIG
-            )["extracted_text"]
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(),
-             "extracted_text": texts}
-        )
+def _pdf_layout_row(doc_id, text):
+    payload = wrap_pdf_layout(text, doc_id)
+    yield doc_id, extract_document(payload, DEFAULT_CONFIG)["extracted_text"]
 
 
 def pdf_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """documents → synth PDF (writer layout rotating classic /
     xref-stream / hybrid-reference by doc_id) → extract →
     (doc_id, extracted_text)."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _pdf_layout_iter, ROUNDTRIP_SCHEMA
+    return map_rows(
+        spread(docs, num_partitions), _pdf_layout_row, ROUNDTRIP_SCHEMA
     )
 
 
@@ -254,28 +224,19 @@ def error_rollup(docs: DataFrame, num_partitions: int | None = None) -> DataFram
     through the real kernel + explode + hash-aggregate path."""
     from pyspark.sql import functions as F
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id % 10 == 3:
-                    payload = b""
-                elif doc_id % 10 == 7:
-                    payload = GARBAGE_PAYLOAD
-                else:
-                    payload = wrap_html(text)
-                r = extract_document(payload, DEFAULT_CONFIG)
-                for e in r["errors"]:
-                    rows.append(
-                        {"doc_id": doc_id, "error_type": e["type"],
-                         "severity": e["severity"]}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "error_type", "severity"]
-            )
+    def error_rows(doc_id, text):
+        if doc_id % 10 == 3:
+            payload = b""
+        elif doc_id % 10 == 7:
+            payload = GARBAGE_PAYLOAD
+        else:
+            payload = wrap_html(text)
+        for e in extract_document(payload, DEFAULT_CONFIG)["errors"]:
+            yield doc_id, e["type"], e["severity"]
 
-    recs = _spread(docs, num_partitions).mapInPandas(
-        it, "doc_id long, error_type string, severity string"
+    recs = map_rows(
+        spread(docs, num_partitions), error_rows,
+        "doc_id long, error_type string, severity string",
     )
     return (
         recs.groupBy("error_type", "severity")
@@ -294,32 +255,18 @@ FULL_RECORD_SCHEMA = (
 )
 
 
-def _full_record_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _full_record_row(doc_id, text):
     """Full extraction record per document: even doc ids wrap as PDF,
     odd as HTML — both branches exercised in one stage."""
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            wrapper = wrap_pdf if doc_id % 2 == 0 else wrap_html
-            r = extract_document(wrapper(text), DEFAULT_CONFIG)
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "branch": r["branch"],
-                    "ok": not any(
-                        e["severity"] in ("error", "critical")
-                        for e in r["errors"]
-                    ),
-                    "score": r["quality"]["score"],
-                    "grade": r["quality"]["grade"],
-                    "coverage": r["quality"]["coverage"],
-                    "status": r["quality"]["status"],
-                    "n_spans": len(r["spans"]),
-                    "n_errors": len(r["errors"]),
-                    "inv_total": r["inventory"]["total"],
-                }
-            )
-        yield pd.DataFrame(rows)
+    wrapper = wrap_pdf if doc_id % 2 == 0 else wrap_html
+    r = extract_document(wrapper(text), DEFAULT_CONFIG)
+    q = r["quality"]
+    ok = not any(e["severity"] in ("error", "critical") for e in r["errors"])
+    yield (
+        doc_id, r["branch"], ok, q["score"], q["grade"], q["coverage"],
+        q["status"], len(r["spans"]), len(r["errors"]),
+        r["inventory"]["total"],
+    )
 
 
 def full_extract_stats(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -328,8 +275,8 @@ def full_extract_stats(docs: DataFrame, num_partitions: int | None = None) -> Da
     ``extracted_text`` that the roundtrip queries don't reach."""
     from pyspark.sql import functions as F
 
-    recs = _spread(docs, num_partitions).mapInPandas(
-        _full_record_iter, FULL_RECORD_SCHEMA
+    recs = map_rows(
+        spread(docs, num_partitions), _full_record_row, FULL_RECORD_SCHEMA
     )
     return (
         recs.groupBy("branch", "grade", "status")
@@ -344,18 +291,10 @@ def full_extract_stats(docs: DataFrame, num_partitions: int | None = None) -> Da
     )
 
 
-def _svg_iter(batches: Iterator[pd.DataFrame]):
+def _svg_row(doc_id, text):
     from ..operators.svg_extract import build_svg, svg_extract_text
 
-    for pdf in batches:
-        texts = [
-            svg_extract_text(build_svg(t, int(d)))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(),
-             "extracted_text": texts}
-        )
+    yield doc_id, svg_extract_text(build_svg(text, doc_id))
 
 
 def svg_roundtrip(docs: DataFrame,
@@ -366,6 +305,4 @@ def svg_roundtrip(docs: DataFrame,
     extraction (operators/svg_extract.py) → (doc_id,
     extracted_text): the shown text must reassemble byte-identical
     from geometry, not document order."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _svg_iter, ROUNDTRIP_SCHEMA
-    )
+    return map_rows(spread(docs, num_partitions), _svg_row, ROUNDTRIP_SCHEMA)

@@ -270,7 +270,7 @@ def sitemap_roundtrip(docs: DataFrame,
     scan prunes to one column (mapInPandas ships every input column —
     Spark cannot see into the Python function); the doc-id
     hash-repartition is the same spread rule as the other sources
-    (docwrap._spread selects text too, which sitemaps never read)."""
+    (rowmap.spread selects text too, which sitemaps never read)."""
     n = (num_partitions
          or docs.sparkSession.sparkContext.defaultParallelism)
     return (

@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG
 from ..operators.document import _dechunk, extract_document
-from .docwrap import _spread, wrap_html
+from ..plans.rowmap import spread
+from .docwrap import wrap_html
 
 WARC_EPOCH = datetime(2024, 1, 1)
 _CRLF = b"\r\n"
@@ -399,7 +400,7 @@ def warc_roundtrip(docs: DataFrame,
     shuffle beyond it; per-row output is independent of how rows fall
     into Arrow batches, because an archive is a pure function of the
     rows grouped into it and extraction is per-record."""
-    return _spread(docs, num_partitions).mapInPandas(
+    return spread(docs, num_partitions).mapInPandas(
         _warc_iter, WARC_ROUNDTRIP_SCHEMA
     )
 
@@ -436,7 +437,7 @@ def wet_roundtrip(docs: DataFrame,
     warc_roundtrip with the WET serialization loop added on top; the
     gzip-member variant flips parity vs the WARC leg so both framings
     are exercised on each side."""
-    return _spread(docs, num_partitions).mapInPandas(
+    return spread(docs, num_partitions).mapInPandas(
         _wet_iter, WARC_ROUNDTRIP_SCHEMA
     )
 
@@ -619,7 +620,7 @@ def resolve_revisits(docs: DataFrame,
     final capture-id attach that the output itself requires."""
     import pyspark.sql.functions as F
 
-    caps = _spread(docs, num_partitions).mapInPandas(
+    caps = spread(docs, num_partitions).mapInPandas(
         _captures_iter, CAPTURES_SCHEMA
     ).localCheckpoint(eager=False)
     resp = caps.where(F.col("kind") == "response")
@@ -837,7 +838,7 @@ def process_recrawl(docs: DataFrame,
     rows never touch the state table)."""
     import pyspark.sql.functions as F
 
-    recs = _spread(docs, num_partitions).mapInPandas(
+    recs = spread(docs, num_partitions).mapInPandas(
         _recrawl_iter, RECRAWL_SCHEMA
     )
     fetched = recs.where(F.col("http_status") != 304).select(

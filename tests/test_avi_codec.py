@@ -279,6 +279,43 @@ class TestAudioStream:
         assert meta["n_frames"] == len(frames)
         assert meta["audio_format"] == 7  # surfaced, not decoded
 
+    def test_auds_listed_before_vids_demuxes_by_stream_number(self):
+        """Streams are numbered by strl order in hdrl: with auds as
+        stream 00 and vids as 01, video rides in ``01dc`` chunks and
+        audio in ``00wb`` — the walk must follow the headers, not
+        assume video is stream 00."""
+        from pdf_extractor_spark.operators.avi_codec import (
+            _iter_chunks,
+            avi_demux,
+        )
+
+        avi, frames, data, _s, _ref = self._av(7)
+        buf = bytearray(avi)
+        # swap the two strl lists (video first, as the muxer emits)
+        v_at = avi.find(b"strl") - 8
+        a_at = avi.find(b"strl", v_at + 12) - 8
+        (a_size,) = struct.unpack_from("<I", avi, a_at + 4)
+        a_end = a_at + 8 + a_size
+        buf[v_at:a_end] = avi[a_at:a_end] + avi[v_at:a_at]
+        # renumber the movi chunks and idx1 entries to match
+        renum = {b"00dc": b"01dc", b"01wb": b"00wb"}
+        movi_at = avi.find(b"movi")
+        (lsize,) = struct.unpack_from("<I", avi, movi_at - 4)
+        for fourcc, body, _size in _iter_chunks(
+            avi, movi_at + 4, movi_at + lsize
+        ):
+            buf[body - 8 : body - 4] = renum[fourcc]
+        idx_at = avi.find(b"idx1", movi_at + lsize)
+        (isize,) = struct.unpack_from("<I", avi, idx_at + 4)
+        for off in range(idx_at + 8, idx_at + 8 + isize, 16):
+            buf[off : off + 4] = renum[avi[off : off + 4]]
+
+        vid, audio, meta = avi_demux(bytes(buf))
+        assert vid == frames
+        assert audio == data
+        assert meta["n_frames"] == len(frames)
+        assert meta["audio_format"] == 7
+
     def test_audio_without_header_is_diagnosed(self):
         from pdf_extractor_spark.operators.avi_codec import avi_demux
 

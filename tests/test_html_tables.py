@@ -134,4 +134,4 @@ class TestSparkStage:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInPandas") == 1
         assert "CartesianProduct" not in plan
-        assert plan.count("Exchange") == 1  # _spread only
+        assert plan.count("Exchange") == 1  # spread only

@@ -13,9 +13,9 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.config import DEFAULT_CONFIG
 from pdf_extractor_spark.fixtures.corpus import build_pages_frame
 from pdf_extractor_spark.plans.pipeline import (
+    _routing_key,
     extract_pages,
     metrics_from_extracted,
-    partition_pages,
 )
 from pdf_extractor_spark.sources import icetable
 from pdf_extractor_spark.sources.pages import (
@@ -27,6 +27,16 @@ from pdf_extractor_spark.sources.pages import (
 )
 
 GOLDEN_DIR = pathlib.Path(__file__).parent / "golden"
+
+
+def _oversized_urls(pages) -> set[str]:
+    """Urls the routing key sends to the salted (oversized) key space."""
+    keyed = pages.select(
+        "url",
+        (_routing_key(DEFAULT_CONFIG) == F.xxhash64("url", F.lit(1)))
+        .alias("oversized"),
+    )
+    return {r["url"] for r in keyed.collect() if r["oversized"]}
 
 
 @pytest.fixture(scope="module")
@@ -241,10 +251,7 @@ def test_oversized_docs_routed_separately(spark):
         ]
     )
     df = pages_from_pandas(spark, frame)
-    normal, oversized = partition_pages(df, 4)
-    assert normal.count() == 1
-    assert oversized.count() == 1
-    assert oversized.select("url").first()["url"].endswith("huge")
+    assert _oversized_urls(df) == {"https://fixture.test/html/huge"}
 
 
 def test_routing_key_balances_partitions(spark):
@@ -252,8 +259,6 @@ def test_routing_key_balances_partitions(spark):
     pre-modded ~2P-value key left ~1/3 of partitions empty and stacked
     bucket-groups. With 512 urls over 16 partitions, every partition
     must be non-empty and no partition grossly overloaded."""
-    from pdf_extractor_spark.plans.pipeline import _routing_key
-
     n_parts = 16
     frame = pd.DataFrame(
         [
@@ -264,9 +269,7 @@ def test_routing_key_balances_partitions(spark):
         ]
     )
     df = pages_from_pandas(spark, frame)
-    routed = df.repartition(
-        n_parts, _routing_key(n_parts, DEFAULT_CONFIG)
-    )
+    routed = df.repartition(n_parts, _routing_key(DEFAULT_CONFIG))
     sizes = routed.rdd.glom().map(len).collect()
     assert len(sizes) == n_parts
     assert min(sizes) > 0, sizes                  # no empty partitions
@@ -345,8 +348,8 @@ def test_oversized_doc_extracts_end_to_end(spark):
     }])
     pages = pages_from_pandas(spark, pd.concat([frame, big],
                                                ignore_index=True))
-    _normal, oversized = partition_pages(pages, 4)
-    assert oversized.count() == 1  # actually crosses oversize_bytes
+    # exactly one doc actually crosses oversize_bytes
+    assert _oversized_urls(pages) == {"http://fixture.example/huge-doc"}
     rows = extract_pages(pages, num_partitions=4).collect()
     assert len(rows) == len(frame) + 1
     huge = [r for r in rows if r["url"].endswith("huge-doc")][0]

@@ -276,7 +276,7 @@ class TestImageLegPlans:
     """The round-4 image legs share the decode-leg layout contract:
     media bytes are born on the partition that decodes them — the
     only exchange carries 8-byte doc_ids (or none at all for the
-    _spread-based harvests), and no per-row Python stage exists."""
+    spread-based harvests), and no per-row Python stage exists."""
 
     def test_jpeg_decode_two_arrow_stages_one_exchange(self, spark):
         plan = _plan(spark, "multimodal_jpeg_decode")
@@ -319,3 +319,143 @@ class TestTrigramKnPlan:
             assert "text" not in keys, keys
         # no cartesian anywhere (the nt scalar joins via broadcast)
         assert "CartesianProduct" not in plan
+
+
+class TestRowMap:
+    """``plans/rowmap.map_rows``: one mapInPandas stage, ``fn(*row)``
+    yields 0..n output tuples in schema order."""
+
+    @staticmethod
+    def _fan(spark):
+        from pdf_extractor_spark.plans.rowmap import map_rows
+
+        def fan(n, tag):  # n output rows for an input row
+            for i in range(n):
+                yield tag, n, i
+
+        df = spark.createDataFrame(
+            [(0, "zero"), (1, "one"), (3, "many")], "n long, tag string"
+        )
+        return map_rows(df, fan, "tag string, n long, i int")
+
+    def test_zero_one_and_many_rows_per_input(self, spark):
+        rows = sorted(tuple(r) for r in self._fan(spark).collect())
+        assert rows == [
+            ("many", 3, 0), ("many", 3, 1), ("many", 3, 2), ("one", 1, 0),
+        ]
+
+    def test_columns_follow_the_schema_not_the_input(self, spark):
+        out = self._fan(spark)
+        assert out.dtypes == [
+            ("tag", "string"), ("n", "bigint"), ("i", "int"),
+        ]
+
+    def test_empty_input_batch_yields_typed_empty_frame(self, spark):
+        import pandas as pd
+
+        from pdf_extractor_spark.plans.rowmap import map_rows
+
+        class Capture:
+            def mapInPandas(self, body, schema):
+                self.body = body
+                return self
+
+        cap = map_rows(Capture(), lambda n: iter(()), "n long, tag string")
+        empty = pd.DataFrame({"n": pd.Series([], dtype="int64")})
+        (out,) = list(cap.body(iter([empty])))
+        assert list(out.columns) == ["n", "tag"] and len(out) == 0
+
+    def test_no_output_rows_at_all(self, spark):
+        from pdf_extractor_spark.plans.rowmap import map_rows
+
+        df = spark.createDataFrame([(1,), (2,)], "n long")
+        out = map_rows(df, lambda n: iter(()), "n long, tag string")
+        assert out.collect() == []
+
+    def test_plan_is_one_map_in_pandas_no_per_row_udf(self, spark):
+        plan = self._fan(spark)._jdf.queryExecution().executedPlan()
+        plan = plan.toString()
+        assert _n(plan, "MapInPandas") == 1
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
+
+
+# Every mapInPandas body that iterates ``batches`` itself, as
+# "module::qualname". Per-row work goes through rowmap.map_rows; a body
+# belongs here only when it needs more than one row at a time.
+_BATCH_BODIES = {
+    # the row-map stage itself
+    "plans/rowmap.py::map_rows.body",
+    # production kernel: stamps per-batch lineage (batch_id, batch_ms)
+    "plans/pipeline.py::_make_extract_iter.extract_iter",
+    # several rows become one archive or file
+    "sources/warc.py::_warc_iter",
+    "sources/warc.py::_wet_iter",
+    "sources/warc.py::_captures_iter",
+    "sources/warc.py::_recrawl_iter",
+    "sources/cdx.py::_cdx_iter",
+    "sources/sitemaps.py::_sitemap_iter",
+    # a memo shared across the rows of a partition
+    "functions/dedup.py::minhash_mapinpandas.fn",
+    "functions/dedup.py::enriched_mapinpandas.fn",
+    "functions/bpe.py::bpe_counts_pandas",
+    # column-vectorised over the whole batch
+    "functions/dedup.py::simhash_mapinpandas.fn",
+    "functions/templates.py::host_template_report.fn",
+    "functions/similarity.py::assign_cells_mapinpandas.fn",
+}
+
+
+def _batch_bodies() -> set[str]:
+    """Functions whose own body (not a nested def) runs a loop or
+    comprehension over ``batches`` or a call on it (``enumerate``)."""
+    import ast
+    import pathlib
+
+    import pdf_extractor_spark
+
+    pkg = pathlib.Path(pdf_extractor_spark.__file__).parent
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def over_batches(it: ast.expr) -> bool:
+        args = it.args if isinstance(it, ast.Call) else [it]
+        return any(isinstance(a, ast.Name) and a.id == "batches"
+                   for a in args)
+
+    def loops_over_batches(fn: ast.AST) -> bool:
+        stack = list(ast.iter_child_nodes(fn))
+        while stack:
+            node = stack.pop()
+            if isinstance(node, (*funcs, ast.Lambda)):
+                continue
+            if isinstance(node, (ast.For, ast.comprehension)) and (
+                over_batches(node.iter)
+            ):
+                return True
+            stack.extend(ast.iter_child_nodes(node))
+        return False
+
+    found: set[str] = set()
+    for path in pkg.rglob("*.py"):
+        module = path.relative_to(pkg).as_posix()
+        todo = [(ast.parse(path.read_text()), "")]
+        while todo:
+            node, prefix = todo.pop()
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, funcs):
+                    qual = prefix + child.name
+                    if loops_over_batches(child):
+                        found.add(f"{module}::{qual}")
+                    todo.append((child, qual + "."))
+                elif isinstance(child, ast.ClassDef):
+                    todo.append((child, prefix + child.name + "."))
+                else:
+                    todo.append((child, prefix))
+    return found
+
+
+def test_batch_loops_only_where_rows_are_not_independent():
+    """A new hand-rolled per-row ``for pdf in batches`` body fails
+    here: route it through ``map_rows``, or add it to the allow-list
+    with the reason it needs more than one row."""
+    assert _batch_bodies() == _BATCH_BODIES

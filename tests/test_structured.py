@@ -174,6 +174,6 @@ class TestSparkStage:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInPandas") == 1
         assert "CartesianProduct" not in plan
-        # the only exchange is _spread's deliberate round-robin of the
+        # the only exchange is spread's deliberate round-robin of the
         # single small parquet file; no shuffle follows the harvest
         assert plan.count("Exchange") == 1

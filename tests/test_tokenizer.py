@@ -175,68 +175,80 @@ def test_filter_chain_decoded_in_order():
 
 def test_png_predictors_roundtrip():
     """Flate + /DecodeParms PNG predictors (all five filter types) and
-    TIFF predictor 2 decode correctly."""
+    TIFF predictor 2 decode correctly, for 1- and 3-byte pixels; a
+    truncated last PNG row decodes to its prefix."""
     import zlib
 
     from pdf_extractor_spark.operators.pdf_tokenizer import _stream_bytes
 
     cols = 7
-    rows = [bytes((r * 31 + c * 7) & 0xFF for c in range(cols))
-            for r in range(6)]
-    plain = b"".join(rows)
 
-    def body_for(encoded: bytes, pred: int) -> bytes:
+    def body_for(encoded: bytes, pred: int, colors: int) -> bytes:
         z = zlib.compress(encoded, 9)
         return (b"<< /Length " + str(len(z)).encode()
                 + b" /Filter /FlateDecode /DecodeParms << /Predictor "
-                + str(pred).encode() + b" /Columns 7 >> >>\nstream\n"
+                + str(pred).encode() + b" /Columns 7 /Colors "
+                + str(colors).encode() + b" >> >>\nstream\n"
                 + z + b"\nendstream")
 
-    # PNG: encode each row with one filter type, decode must invert
-    for ft in range(5):
-        enc = bytearray()
-        prev = bytes(cols)
-        for row in rows:
-            enc.append(ft)
-            if ft == 0:
-                enc += row
-            elif ft == 1:
-                enc += bytes(
-                    (row[i] - (row[i - 1] if i else 0)) & 0xFF
-                    for i in range(cols)
-                )
-            elif ft == 2:
-                enc += bytes((row[i] - prev[i]) & 0xFF for i in range(cols))
-            elif ft == 3:
-                enc += bytes(
-                    (row[i] - ((row[i - 1] if i else 0) + prev[i]) // 2)
-                    & 0xFF
-                    for i in range(cols)
-                )
-            else:  # paeth: with a=left, b=up, c=up-left
-                out_row = bytearray()
-                for i in range(cols):
-                    a = row[i - 1] if i else 0
-                    b = prev[i]
-                    c = prev[i - 1] if i else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pr = a if (pa <= pb and pa <= pc) else (
-                        b if pb <= pc else c
+    for colors, cut in ((1, 0), (3, 0), (1, 3), (3, 8)):
+        bpp = colors
+        rowlen = cols * colors
+        rows = [bytes((r * 31 + c * 7) & 0xFF for c in range(rowlen))
+                for r in range(6)]
+        plain = b"".join(rows)[: 6 * rowlen - cut]
+        # PNG: encode each row with one filter type, decode must invert
+        for ft in range(5):
+            enc = bytearray()
+            prev = bytes(rowlen)
+            for row in rows:
+                enc.append(ft)
+                if ft == 0:
+                    enc += row
+                elif ft == 1:
+                    enc += bytes(
+                        (row[i] - (row[i - bpp] if i >= bpp else 0)) & 0xFF
+                        for i in range(rowlen)
                     )
-                    out_row.append((row[i] - pr) & 0xFF)
-                enc += out_row
-            prev = row
-        assert _stream_bytes(body_for(bytes(enc), 10 + ft)) == plain, ft
+                elif ft == 2:
+                    enc += bytes(
+                        (row[i] - prev[i]) & 0xFF for i in range(rowlen)
+                    )
+                elif ft == 3:
+                    enc += bytes(
+                        (row[i] - ((row[i - bpp] if i >= bpp else 0)
+                                   + prev[i]) // 2)
+                        & 0xFF
+                        for i in range(rowlen)
+                    )
+                else:  # paeth: with a=left, b=up, c=up-left
+                    out_row = bytearray()
+                    for i in range(rowlen):
+                        a = row[i - bpp] if i >= bpp else 0
+                        b = prev[i]
+                        c = prev[i - bpp] if i >= bpp else 0
+                        p = a + b - c
+                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                        pr = a if (pa <= pb and pa <= pc) else (
+                            b if pb <= pc else c
+                        )
+                        out_row.append((row[i] - pr) & 0xFF)
+                    enc += out_row
+                prev = row
+            enc = bytes(enc[: len(enc) - cut])
+            got = _stream_bytes(body_for(enc, 10 + ft, colors))
+            assert got == plain, (colors, cut, ft)
 
-    # TIFF predictor 2: horizontal differencing, no row-type bytes
-    enc2 = bytearray()
-    for row in rows:
-        enc2 += bytes(
-            (row[i] - (row[i - 1] if i else 0)) & 0xFF
-            for i in range(cols)
-        )
-    assert _stream_bytes(body_for(bytes(enc2), 2)) == plain
+        if cut:
+            continue
+        # TIFF predictor 2: horizontal differencing, no row-type bytes
+        enc2 = bytearray()
+        for row in rows:
+            enc2 += bytes(
+                (row[i] - (row[i - bpp] if i >= bpp else 0)) & 0xFF
+                for i in range(rowlen)
+            )
+        assert _stream_bytes(body_for(bytes(enc2), 2, colors)) == plain
 
 
 def test_xref_stream_pdf_parses_identically():
